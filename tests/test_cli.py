@@ -148,3 +148,95 @@ def test_cli_no_audio_rejects_tsv_sink(media_tree, tmp_path):
     included) — elision is a native-sink feature."""
     with pytest.raises(SystemExit):
         main([media_tree, "--output", str(tmp_path / "o"), "--no-audio"])
+
+
+def _counting_ffprobe(tmp_path) -> tuple[str, str]:
+    """The subprocess-test ffprobe stand-in, appending one byte to a
+    count file per invocation → (binary, count file)."""
+    import stat
+
+    from tests.test_probe_subprocess import _FAKE_FFPROBE
+
+    count = tmp_path / "probe_calls"
+    p = tmp_path / "ffprobe-counting"
+    shebang, body = _FAKE_FFPROBE.split("\n", 1)
+    p.write_text(f"{shebang}\nprintf . >> '{count}'\n{body}")
+    p.chmod(p.stat().st_mode | stat.S_IXUSR)
+    return str(p), str(count)
+
+
+def test_cli_probes_each_candidate_once(media_tree, tmp_path, capsys):
+    """One ffprobe call per candidate per invocation: the probe output
+    is materialized once and the sink, update's count, the dead-letter
+    report and the -v variant report all reuse it."""
+    with open(os.path.join(media_tree, "[2001] bad.mkv"), "wb") as f:
+        f.write(b"b" * 20)  # the stand-in exits non-zero on "bad" paths
+    ffprobe, count = _counting_ffprobe(tmp_path)
+
+    def calls() -> int:
+        return os.path.getsize(count) if os.path.exists(count) else 0
+
+    out = str(tmp_path / "out")
+    assert main([media_tree, "--output", out, "--ffprobe-bin", ffprobe, "-v"]) == 0
+    stdout = capsys.readouterr().out
+    assert calls() == 4  # 3 good videos + 1 corrupt
+    assert "files probed: 4, ok: 3, failed: 1" in stdout
+    assert "bad.mkv" in stdout  # the dead letter is listed
+    assert "variant report" in stdout
+
+    assert main(["-u", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
+    stdout = capsys.readouterr().out
+    assert calls() == 8  # once per listed candidate, not once per action
+    assert "appended 0 new rows" in stdout
+    assert "files probed: 4, ok: 3, failed: 1" in stdout
+
+
+def test_cli_update_fails_on_unreadable_db(media_tree, probe_fixture, tmp_path):
+    """Only a missing db turns an update into a build; a db that exists
+    but cannot be read must fail, never append every row again."""
+    out = tmp_path / "out"
+    db = out / "metadata_db.parquet"
+    db.mkdir(parents=True)
+    (db / "part-00000-broken.parquet").write_bytes(b"not a parquet file")
+    before = {p.name: p.read_bytes() for p in db.iterdir()}
+
+    try:
+        rc = main(["-u", "--format", "parquet", media_tree, "--output", str(out),
+                   "--probe-fixture", probe_fixture])
+    except Exception:
+        rc = None
+    assert rc != 0
+    assert {p.name: p.read_bytes() for p in db.iterdir()} == before
+
+
+def test_cli_releases_its_caches(spark, media_tree, probe_fixture, tmp_path):
+    """The listing cache and the persisted probe are released when main
+    returns, so repeated in-process runs do not pile up cached blocks.
+    (Compared by RDD id: the JVM holds persisted RDDs weakly, so one an
+    earlier test dropped may be collected meanwhile.)"""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    out = str(tmp_path / "out")
+    before = set(persistent().keys())
+    assert main([media_tree, "--output", out, "--probe-fixture", probe_fixture, "-v"]) == 0
+    assert main(["-u", "-p", media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    assert set(persistent().keys()) - before == set()
+
+
+def test_cli_percentage_walks_the_tree_once(media_tree, probe_fixture, tmp_path, capsys, monkeypatch):
+    """-p counts candidates from the listing the build already caches."""
+    from video_metadata_db_spark.sources import listing
+
+    walks = []
+    list_files = listing.list_files
+
+    def counting_list_files(*args, **kwargs):
+        walks.append(args[1])
+        return list_files(*args, **kwargs)
+
+    monkeypatch.setattr(listing, "list_files", counting_list_files)
+    out = str(tmp_path / "out")
+    assert main(["-p", media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    stdout = capsys.readouterr().out
+    assert "files to probe: 3" in stdout
+    assert "files probed: 3, ok: 3, failed: 0" in stdout
+    assert len(walks) == 1

@@ -25,6 +25,12 @@ left-anti membership join + append (:579-582); merge = union-all +
 whole-line sort + header (:1361-1456).  Every stage is a DataFrame —
 the thread pool, the five mutexes, and the external OS ``sort`` of the
 reference have no equivalent here by design.
+
+One invocation walks the tree once and runs ffprobe once per candidate:
+the listing is cached and the probe output is persisted, so the ``-p``
+headcount, update's count, the sorted sink, the dead-letter report and
+the ``-v`` variant report all read the same rows.  Both are released
+before ``main`` returns.
 """
 
 from __future__ import annotations
@@ -32,6 +38,8 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -123,20 +131,25 @@ def _probe(
     return probe_videos(candidates, fields=fields, ffprobe_bin=ffprobe_bin)
 
 
+@contextmanager
 def _build_records(
     spark: SparkSession,
     roots: list[str],
     fixture: str | None,
     no_audio: bool = False,
     ffprobe_bin: str = "ffprobe",
-) -> tuple[DataFrame, DataFrame, "Observation"]:
-    """list → filter → probe → sidecar join → (records, dead_letter,
-    probe-stats observation).
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, "Observation"]]:
+    """list → filter → probe → sidecar join → (candidates, records,
+    dead_letter, probe-stats observation), released on exit.
 
-    The ``Observation`` rides the probe stage (reference: the run
-    summary + ``-p`` progress counters, video_metadata_db.py:456-535,
-    :1293-1315): total/failed counts come back WITH the sink action —
-    no second pass over the corpus to report statistics.
+    The probe output is persisted *below* the ``Observation`` (reference:
+    the run summary + ``-p`` progress counters, video_metadata_db.py:
+    456-535, :1293-1315), so the first action both materializes it and
+    brings back the total/failed counts.  Every later action — update's
+    count, the sink, the dead-letter and variant reports — reads those
+    rows instead of launching ffprobe again.  The listing is cached the
+    same way: candidates, sidecars and the ``-p`` headcount share one
+    walk.  Both caches are released when the ``with`` block exits.
 
     ``no_audio`` drops the audio columns from the sink schema and
     propagates the narrowed field set down to the ffprobe invocation
@@ -160,16 +173,23 @@ def _build_records(
         fields = probe_fields_for(sink_cols)
 
     listing = list_files(spark, roots, volume_label=_volume_label(roots)).cache()
-    candidates = filter_candidates(listing, assume_pruned=True)
-    obs = Observation("probe_stats")
-    probed = _probe(spark, candidates, fixture, fields, ffprobe_bin).observe(
-        obs,
-        F.count(F.lit(1)).alias("n_probed"),
-        F.count(F.col("error")).alias("n_failed"),
-    )
-    sidecars = listing.filter(F.col("name").rlike(r"\.srt$")).select("path", "size_bytes")
-    records, dead = build_metadata_records(listing, probed, sidecars, assume_pruned=True)
-    return records, dead, obs
+    try:
+        candidates = filter_candidates(listing, assume_pruned=True)
+        probed = _probe(spark, candidates, fixture, fields, ffprobe_bin).persist()
+        try:
+            obs = Observation("probe_stats")
+            observed = probed.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_probed"),
+                F.count(F.col("error")).alias("n_failed"),
+            )
+            sidecars = listing.filter(F.col("name").rlike(r"\.srt$")).select("path", "size_bytes")
+            records, dead = build_metadata_records(listing, observed, sidecars, assume_pruned=True)
+            yield candidates, records, dead, obs
+        finally:
+            probed.unpersist()
+    finally:
+        listing.unpersist()
 
 
 def _volume_label(roots: list[str]) -> str:
@@ -247,50 +267,45 @@ def main(argv: list[str] | None = None) -> int:
         created = create_nomedia_markers(filtered_dirs(spark, args.paths))
         print(f".nomedia markers: {created.filter(F.col('status') == 'created').count()} created")
 
-    if args.percentage:
-        # two-pass headcount (:1545-1568) — one distributed count here
-        from .operators.pipeline import filter_candidates
-        from .sources.listing import list_files
-
-        total = filter_candidates(list_files(spark, args.paths), assume_pruned=True).count()
-        print(f"files to probe: {total}")
-
-    records, dead, obs = _build_records(
+    with _build_records(
         spark,
         args.paths,
         args.probe_fixture,
         no_audio=args.no_audio,
         ffprobe_bin=args.ffprobe_bin,
-    )
+    ) as (candidates, records, dead, obs):
+        if args.percentage:
+            # two-pass headcount (:1545-1568) — one count over the cached listing
+            print(f"files to probe: {candidates.count()}")
 
-    if args.update_mode:
-        # update mode (:579-582, :1529-1532): anti-join against the
-        # existing db's paths, append only the new rows
-        from .operators.parity import update_new_files
-        from .sources.tsv import from_boundary, read_metadata_tsv
+        if args.update_mode:
+            # update mode (:579-582, :1529-1532): anti-join against the
+            # existing db's paths, append only the new rows
+            from .operators.parity import update_new_files
+            from .sources.tsv import from_boundary, read_metadata_tsv
 
-        db_path = os.path.join(args.output, "metadata_db.tsv")
-        if args.sink_format == "parquet":
-            db_path = os.path.join(args.output, "metadata_db.parquet")
-        try:
+            db_path = os.path.join(args.output, "metadata_db.tsv")
             if args.sink_format == "parquet":
-                existing = spark.read.parquet(db_path)
-            else:
-                existing = from_boundary(read_metadata_tsv(spark, db_path, header=True))
-            records = update_new_files(records, existing, key="path")
-        except Exception:
-            pass  # no existing db — update degenerates to build (:1254-1283)
-        n_new = records.count()
-        if n_new:
-            _write(records, args.output, args.sink_format, mode="append")
-        print(f"update: appended {n_new} new rows")
-        _report(obs.get, dead, records, args.verbose)
-        return 0
+                db_path = os.path.join(args.output, "metadata_db.parquet")
+            # no db yet: update degenerates to build (:1254-1283).  A db
+            # that exists but cannot be read fails here, never re-appends.
+            if os.path.exists(db_path):
+                if args.sink_format == "parquet":
+                    existing = spark.read.parquet(db_path)
+                else:
+                    existing = from_boundary(read_metadata_tsv(spark, db_path, header=True))
+                records = update_new_files(records, existing, key="path")
+            n_new = records.count()
+            if n_new:
+                _write(records, args.output, args.sink_format, mode="append")
+            print(f"update: appended {n_new} new rows")
+            _report(obs.get, dead, records, args.verbose)
+            return 0
 
-    path = _write(records, args.output, args.sink_format, mode="overwrite")
-    _report(obs.get, dead, records, args.verbose)
-    print(f"db written: {path}")
-    return 0
+        path = _write(records, args.output, args.sink_format, mode="overwrite")
+        _report(obs.get, dead, records, args.verbose)
+        print(f"db written: {path}")
+        return 0
 
 
 if __name__ == "__main__":
