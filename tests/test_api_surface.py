@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import importlib
 import pkgutil
+import subprocess
+import sys
+from pathlib import Path
 
 import video_metadata_db_spark as pkg
 
@@ -38,6 +41,28 @@ def test_checked_window_invariants():
     assert list(QUERIES)[:50] == CHECKED_FIRST
     missing = [n for n in CHECKED_FIRST if n not in ORACLES]
     assert not missing, f"checked-window queries without oracle: {missing}"
+
+
+def test_broken_query_module_fails_the_registry_import():
+    """A query module that cannot be imported must fail
+    ``from ...plans import QUERIES`` — never leave a registry with that
+    module's queries missing and the checked window out of order."""
+    code = (
+        "import sys\n"
+        "sys.modules['video_metadata_db_spark.plans.lake_queries'] = None\n"
+        "from video_metadata_db_spark.plans import QUERIES\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode != 0
+    # ModuleNotFoundError is the ImportError subclass a None entry raises
+    error = proc.stderr.strip().splitlines()[-1].partition(":")[0]
+    assert error in ("ImportError", "ModuleNotFoundError"), proc.stderr
 
 
 def test_checked_window_output_types_are_driver_hashable(spark, sf_dir):

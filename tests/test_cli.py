@@ -10,9 +10,10 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from video_metadata_db_spark.__main__ import main
-from video_metadata_db_spark.schemas import PROBE_SCHEMA
+from video_metadata_db_spark.schemas import PROBE_SCHEMA, TSV_HEADER
 from video_metadata_db_spark.sources.tsv import read_metadata_tsv
 
 
@@ -95,10 +96,32 @@ def test_cli_merge_unions_and_sorts(spark, media_tree, probe_fixture, tmp_path):
         "--output", merged_dir,
     ])
     assert rc == 0
-    merged = read_metadata_tsv(
-        spark, os.path.join(merged_dir, "metadata_db_merged.tsv"), header=True
-    )
+    merged_db = os.path.join(merged_dir, "metadata_db_merged.tsv")
+    merged = read_metadata_tsv(spark, merged_db, header=True)
     assert merged.count() == 6  # union-all keeps duplicates (:1345-1357)
+
+    rows = []
+    for name in sorted(n for n in os.listdir(merged_db) if n.startswith("part-")):
+        with open(os.path.join(merged_db, name), encoding="utf-8") as f:
+            lines = f.read().splitlines()
+        assert lines[0] == "\t".join(TSV_HEADER), name
+        rows.extend(line.split("\t") for line in lines[1:])
+    assert len(rows) == 6
+    keys = [_sort_line(r) for r in rows]
+    assert keys == sorted(keys, reverse=True)  # whole-line descending
+    volume = TSV_HEADER.index("Volume Label")
+    assert all(r[volume] for r in rows)
+    assert merged.filter(F.col("`Volume Label`").isNull()).count() == 0
+
+
+def _sort_line(r: list[str]) -> str:
+    """The whole line the sink sorts on, rebuilt from a written row: the
+    CSV writer trims the padded width/height and the single-space missing
+    subtitle sizes, and NULL audio cells are skipped in the sort key."""
+    f = list(r)
+    f[0], f[1] = f[0].rjust(4), f[1].rjust(4)
+    f[13], f[15] = f[13] or " ", f[15] or " "
+    return "\t".join(v for i, v in enumerate(f) if v or i not in (9, 10))
 
 
 def test_cli_nomedia_markers(media_tree, probe_fixture, tmp_path, capsys):

@@ -21,7 +21,6 @@ from video_metadata_db_spark.sources.tsv import (
     read_metadata_tsv,
     to_boundary,
     write_metadata_tsv,
-    write_metadata_tsv_per_volume,
 )
 
 
@@ -115,24 +114,6 @@ def test_update_idempotent(spark, built):
     assert again.count() == 0
 
 
-def test_per_volume_write(spark, built, tmp_path):
-    """One db per volume label (reference :508-514): partition dirs
-    exist per volume, rows keep the inline Volume Label column."""
-    import os
-
-    records, _ = built
-    out = str(tmp_path / "per_volume")
-    write_metadata_tsv_per_volume(records, out)
-    parts_dirs = sorted(d for d in os.listdir(out) if d.startswith("_volume="))
-    volumes = sorted(
-        r["volume_label"] for r in records.select("volume_label").distinct().collect()
-    )
-    assert parts_dirs == [f"_volume={v}" for v in volumes]
-    back = read_metadata_tsv(spark, [f"{out}/{d}" for d in parts_dirs])
-    assert back.count() == records.count()
-    assert back.filter(F.col("`Volume Label`").isNull()).count() == 0
-
-
 def test_nomedia_markers(spark, tmp_path):
     """.nomedia side-effect sink (reference :947-971): markers created
     in filtered dirs, idempotent on rerun, results reported as rows."""
@@ -167,15 +148,10 @@ def test_variant_report_on_fixtures(spark, parts):
         assert len(r["variants"]) == r["n_variants"]
 
 
-def test_distributed_listing_matches_driver_walk(spark, tmp_path):
-    """list_files_distributed == list_files row-for-row, at multiple
-    fan-out depths, with pruned dirs and loose top-level files."""
-    import os
-
-    from video_metadata_db_spark.sources.listing import (
-        list_files,
-        list_files_distributed,
-    )
+def test_list_files_prunes_and_keeps_loose_files(spark, tmp_path):
+    """The driver-side walk lists a loose top-level file and nested
+    files, and prunes a filtered directory during the walk."""
+    from video_metadata_db_spark.sources.listing import list_files
 
     root = tmp_path / "tree"
     (root / "a" / "deep").mkdir(parents=True)
@@ -187,17 +163,16 @@ def test_distributed_listing_matches_driver_walk(spark, tmp_path):
     (root / "b" / "three.mp4").write_bytes(b"4444")
     (root / "Extras" / "cut.mkv").write_bytes(b"x")
 
-    def rows(df):
-        return sorted(
-            (r["path"], r["parent_dir"], r["name"], r["ext"], r["size_bytes"])
-            for r in df.collect()
-        )
-
-    base = rows(list_files(spark, [str(root)]))
-    assert len(base) == 4  # Extras pruned
-    for depth in (1, 2, 3):
-        got = rows(list_files_distributed(spark, [str(root)], fanout_depth=depth))
-        assert got == base, f"fanout_depth={depth}"
+    got = sorted(
+        (r["path"], r["parent_dir"], r["name"], r["ext"], r["size_bytes"], r["volume_label"])
+        for r in list_files(spark, [str(root)], volume_label="V").collect()
+    )
+    assert got == [
+        (str(root / "a" / "deep" / "two.avi"), "deep", "two.avi", "avi", 3, "V"),
+        (str(root / "a" / "one.mkv"), "a", "one.mkv", "mkv", 2, "V"),
+        (str(root / "b" / "three.mp4"), "b", "three.mp4", "mp4", 4, "V"),
+        (str(root / "loose.mkv"), "tree", "loose.mkv", "mkv", 1, "V"),
+    ]
 
 
 def test_probe_videos_dead_letters_without_ffprobe(spark, tmp_path):

@@ -2,6 +2,9 @@
 """Regenerate PLANS.md: formatted physical plans for the headline
 queries, with a scan/exchange/codegen summary per query.
 
+The headline queries are the ones PLANS.md already has a ``## <name>``
+section for, in that order; add a section heading to add a query.
+
 Run from the repo root: ``python tools/dump_plans.py``.  The artifact is
 committed so plan quality (pushdown, pruning, broadcast choices,
 whole-stage codegen coverage) is reviewable without a Spark session.
@@ -35,8 +38,12 @@ def summarize(plan: str) -> str:
     )
 
 
+def headline(queries) -> list[str]:
+    text = Path("PLANS.md").read_text(encoding="utf-8")
+    return [n for n in re.findall(r"^## (\S+)$", text, re.M) if n in queries]
+
+
 def main() -> None:
-    from bench import HEADLINE
     from video_metadata_db_spark.plans import QUERIES
     from video_metadata_db_spark.session import get_spark
 
@@ -51,7 +58,8 @@ def main() -> None:
         "",
         "## Bench method, variance envelope, and the regression rule",
         "",
-        "`bench.py` reports best-of-2 wall times at sf0.1 on local[32]; the first",
+        "The retired `bench.py` reported best-of-2 wall times at sf0.1 on local[32]",
+        "(`perfbench/run.py` is the benchmark now); the first",
         "run in a session is ~2× slower (JVM + codegen warmup) and never",
         "comparable.  Repeated WARM runs of a sub-second query on this box vary",
         "±25-30%; treat any cross-round delta inside that envelope on a",
@@ -160,7 +168,7 @@ def main() -> None:
         "byte-identical.",
         "",
     ]
-    for name in HEADLINE:
+    for name in headline(QUERIES):
         df = QUERIES[name](spark, SF_DIR)
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -20,7 +20,7 @@ Engine-side additions (no reference analogue):
     --format tsv|parquet  sink format (parquet = the engine-native form)
 
 Mode dispatch mirrors §3: build (default) = list → filter → probe →
-sidecar join → sorted per-volume TSV; update = the same behind a
+sidecar join → sorted TSV db; update = the same behind a
 left-anti membership join + append (:579-582); merge = union-all +
 whole-line sort + header (:1361-1456).  Every stage is a DataFrame —
 the thread pool, the five mutexes, and the external OS ``sort`` of the
@@ -203,14 +203,17 @@ def _volume_label(roots: list[str]) -> str:
         return os.path.sep
 
 
+def _db_path(out_dir: str, fmt: str) -> str:
+    return os.path.join(out_dir, f"metadata_db.{fmt}")
+
+
 def _write(records: DataFrame, out_dir: str, fmt: str, mode: str) -> str:
     from .sources.tsv import write_metadata_tsv
 
+    path = _db_path(out_dir, fmt)
     if fmt == "parquet":
-        path = os.path.join(out_dir, "metadata_db.parquet")
         records.write.mode(mode).parquet(path)
     else:
-        path = os.path.join(out_dir, "metadata_db.tsv")
         write_metadata_tsv(records, path, header=True, mode=mode)
     return path
 
@@ -247,17 +250,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.merge_mode:
         # merge mode (:1361-1456): union-all TSV dbs → whole-line sort → header
         from .operators.parity import merge_metadata_dbs
-        from .sources.tsv import boundary_sorted, read_metadata_tsv
+        from .sources.tsv import read_metadata_tsv, write_boundary_tsv
 
         dbs = [read_metadata_tsv(spark, p, header=True) for p in args.paths]
-        merged = boundary_sorted(merge_metadata_dbs(dbs, sort_cols=[]))
         out = os.path.join(args.output, "metadata_db_merged.tsv")
-        (
-            merged.write.mode("overwrite")
-            .option("sep", "\t").option("header", "true")
-            .option("emptyValue", "").option("nullValue", "")
-            .csv(out)
-        )
+        write_boundary_tsv(merge_metadata_dbs(dbs, sort_cols=[]), out, header=True)
         print(f"merged {len(dbs)} dbs -> {out}")
         return 0
 
@@ -284,9 +281,7 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.parity import update_new_files
             from .sources.tsv import from_boundary, read_metadata_tsv
 
-            db_path = os.path.join(args.output, "metadata_db.tsv")
-            if args.sink_format == "parquet":
-                db_path = os.path.join(args.output, "metadata_db.parquet")
+            db_path = _db_path(args.output, args.sink_format)
             # no db yet: update degenerates to build (:1254-1283).  A db
             # that exists but cannot be read fails here, never re-appends.
             if os.path.exists(db_path):

@@ -1,11 +1,9 @@
-from .datasource import VideoListingDataSource
 from .export import read_training_shards, write_training_shards
 from .maintenance import compact_parquet, input_bytes
 from .tables import TABLES, load_table, load_tables, register_views
 
 __all__ = [
     "TABLES",
-    "VideoListingDataSource",
     "compact_parquet",
     "input_bytes",
     "load_table",

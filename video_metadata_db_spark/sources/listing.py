@@ -1,20 +1,12 @@
 """Directory-scan source: the reference's ``os.walk`` stage as a DataFrame.
 
 The reference walks each root single-node with in-walk directory pruning
-and an extension whitelist (``video_metadata_db.py:975-1064``).  Here:
-
-- ``list_files``: driver-side walk (pruning applied during the walk, so
-  filtered subtrees are never even listed — the cheap path for a handful
-  of roots).
-- ``list_files_distributed``: the 100 TB path — fan the *directories*
-  out as rows and walk each in parallel tasks via ``mapInPandas``.  With
-  millions of directories on shared storage, listing itself is the
-  bottleneck; this spreads the metadata RPCs across the cluster.
-
-Both return ``LISTING_SCHEMA`` rows; extension/dir filters can then be
-applied as Catalyst predicates (functions.scalar) — but the walk-time
-prune is kept for parity and because not-listing is cheaper than
-list-then-filter.
+and an extension whitelist (``video_metadata_db.py:975-1064``).
+``list_files`` is the same driver-side walk: filtered subtrees are pruned
+during the walk, so they are never even listed, and the rows come back
+as ``LISTING_SCHEMA``.  Extension/dir filters can then be applied as
+Catalyst predicates (functions.scalar) — the walk-time prune is kept for
+parity and because not-listing is cheaper than list-then-filter.
 """
 
 from __future__ import annotations
@@ -30,12 +22,11 @@ from ..schemas import LISTING_SCHEMA
 
 
 def _walk_one(
-    root: str, volume_label: str, prune: bool = True
+    root: str, volume_label: str
 ) -> Iterator[tuple[str, str, str, str, int, datetime, str]]:
     for path_dir, sub_dirs, file_names in os.walk(root, topdown=True):
-        if prune:
-            # prune in-place so os.walk never descends (parity :1014)
-            sub_dirs[:] = [d for d in sub_dirs if d not in DIRECTORY_FILTERS]
+        # prune in-place so os.walk never descends (parity :1014)
+        sub_dirs[:] = [d for d in sub_dirs if d not in DIRECTORY_FILTERS]
         for fname in file_names:
             full = os.path.join(path_dir, fname)
             try:
@@ -54,66 +45,7 @@ def _walk_one(
             )
 
 
-def list_files(
-    spark: SparkSession,
-    roots: Iterable[str],
-    volume_label: str = "",
-    prune: bool = True,
-) -> DataFrame:
+def list_files(spark: SparkSession, roots: Iterable[str], volume_label: str = "") -> DataFrame:
     """Driver-side recursive listing of ``roots`` → LISTING_SCHEMA rows."""
-    rows = [r for root in dict.fromkeys(roots) for r in _walk_one(root, volume_label, prune)]
+    rows = [r for root in dict.fromkeys(roots) for r in _walk_one(root, volume_label)]
     return spark.createDataFrame(rows, LISTING_SCHEMA)
-
-
-def list_files_distributed(
-    spark: SparkSession,
-    roots: Iterable[str],
-    volume_label: str = "",
-    prune: bool = True,
-    fanout_depth: int = 1,
-) -> DataFrame:
-    """Distributed listing: expand each root ``fanout_depth`` levels on
-    the driver (cheap), then walk each sub-directory in parallel tasks.
-
-    At 1000-executor scale the driver only enumerates the top levels;
-    the long tail of directory RPCs runs cluster-side.
-    """
-    units: list[str] = []
-    frontier = list(dict.fromkeys(roots))
-    for _ in range(fanout_depth):
-        nxt: list[str] = []
-        for d in frontier:
-            try:
-                entries = sorted(os.scandir(d), key=lambda e: e.name)
-            except OSError:
-                continue
-            for e in entries:
-                if e.is_dir(follow_symlinks=False):
-                    if prune and e.name in DIRECTORY_FILTERS:
-                        continue
-                    nxt.append(e.path)
-                else:
-                    units.append(e.path)  # loose files at this level
-        frontier = nxt
-    dir_units = frontier
-
-    import pandas as pd  # local import: executors re-import lazily
-
-    def walk_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for d in pdf["dir"]:
-                out.extend(_walk_one(d, volume_label, prune))
-            yield pd.DataFrame(out, columns=[f.name for f in LISTING_SCHEMA.fields])
-
-    dirs_df = spark.createDataFrame([(d,) for d in dir_units], "dir string").repartition(
-        max(len(dir_units) // 4, 1)
-    )
-    walked = dirs_df.mapInPandas(walk_partition, LISTING_SCHEMA)
-    if not units:
-        return walked
-    loose_rows = [
-        r for u in units for r in _walk_one(os.path.dirname(u), volume_label, prune)
-        if r[0] == u
-    ]
-    return walked.unionByName(spark.createDataFrame(loose_rows, LISTING_SCHEMA)) if loose_rows else walked

@@ -94,20 +94,20 @@ def boundary_sorted(boundary: DataFrame) -> DataFrame:
     return boundary.orderBy(line.desc())
 
 
-def write_metadata_tsv(
-    records: DataFrame, path: str, header: bool = False, mode: str = "overwrite", sort: bool = True
+def write_boundary_tsv(
+    boundary: DataFrame, path: str, header: bool = False, mode: str = "overwrite"
 ) -> None:
-    """Typed records → sorted TSV db directory.
+    """Boundary string columns → whole-line sorted TSV db directory: the
+    one place the CSV writer options are spelled (build, update and merge
+    all write through here).
 
     ``mode='append'`` is update mode's ``"a"`` (:1529-1532); the
     reference's single-writer mutex (:44, :682-690) disappears — each
     task writes its own part file.
     """
-    boundary = to_boundary(records)
-    if sort:
-        boundary = boundary_sorted(boundary)
     (
-        boundary.write.mode(mode)
+        boundary_sorted(boundary)
+        .write.mode(mode)
         .option("sep", "\t")
         .option("header", str(header).lower())
         .option("emptyValue", "")
@@ -116,32 +116,11 @@ def write_metadata_tsv(
     )
 
 
-def db_name_for(root: str, volume_label: str) -> str:
-    """Reference db naming: ``<root> - <volume>.tsv``
-    (``db_name_generate``, video_metadata_db.py:508-514)."""
-    return f"{root} - {volume_label}.tsv" if volume_label else f"{root}.tsv"
-
-
-def write_metadata_tsv_per_volume(
-    records: DataFrame, base_path: str, header: bool = False, mode: str = "overwrite"
+def write_metadata_tsv(
+    records: DataFrame, path: str, header: bool = False, mode: str = "overwrite"
 ) -> None:
-    """One db per volume label — the reference opens a separate TSV per
-    input volume (:508-514, :1232).  Spark-idiomatic rendering: a
-    partitioned write (``volume_label=<X>/`` subdirs); the label stays
-    inline in the row too (boundary column 17), unlike a plain
-    ``partitionBy`` which would hoist it out of the data."""
-    boundary = boundary_sorted(to_boundary(records)).withColumn(
-        "_volume", _bcol("Volume Label")
-    )
-    (
-        boundary.write.mode(mode)
-        .partitionBy("_volume")
-        .option("sep", "\t")
-        .option("header", str(header).lower())
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .csv(base_path)
-    )
+    """Typed records → sorted TSV db directory."""
+    write_boundary_tsv(to_boundary(records), path, header=header, mode=mode)
 
 
 _BOUNDARY_READ_SCHEMA = T.StructType(
