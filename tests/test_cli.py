@@ -1,20 +1,54 @@
 """End-to-end CLI tests: ``python -m video_metadata_db_spark`` over a
-real temp directory tree with a parquet probe fixture (ffprobe absent
-in CI).  Covers build, update idempotence, merge, and the nomedia
-side-effect — the reference's full command surface (SURVEY.md §3,
+real temp directory tree, probed through the real subprocess path with
+an ``--ffprobe-bin`` stand-in that prints each video file's bytes (the
+files hold the JSON ffprobe would print).  Covers build, update
+idempotence, merge, the nomedia side-effect and the probe failure modes
+— the reference's full command surface (SURVEY.md §3,
 video_metadata_db.py:850-915, :1475-1602).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import stat
 
 import pytest
 from pyspark.sql import functions as F
 
 from video_metadata_db_spark.__main__ import main
-from video_metadata_db_spark.schemas import PROBE_SCHEMA, TSV_HEADER
+from video_metadata_db_spark.schemas import TSV_HEADER
 from video_metadata_db_spark.sources.tsv import read_metadata_tsv
+
+_STANDIN = r"""#!/bin/sh
+# ffprobe stand-in: the probed file's bytes are the JSON ffprobe would
+# print; a file named *bad* fails like an unreadable one
+{count}for last; do :; done
+case "${{last##*/}}" in
+  *bad*) echo "boom: cannot open '$last'" >&2; exit 1 ;;
+esac
+exec cat -- "$last"
+"""
+
+
+def _write_standin(path, count: str | None = None) -> str:
+    """The stand-in at ``path``; with ``count`` it also appends one byte
+    to that file per invocation."""
+    path.write_text(_STANDIN.format(count=f"printf . >> '{count}'\n" if count else ""))
+    path.chmod(path.stat().st_mode | stat.S_IXUSR)
+    return str(path)
+
+
+def _probe_json(video: tuple[int, int] | None) -> bytes:
+    """ffprobe JSON for a file with a video stream of size ``video``
+    (None: audio only) and one audio stream."""
+    streams = [{"codec_type": "audio", "codec_long_name": "AAC", "channels": 2}]
+    if video is not None:
+        w, h = video
+        streams.insert(0, {"codec_type": "video", "codec_long_name": "H.264 / AVC",
+                           "width": w, "height": h})
+    fmt = {"nb_streams": len(streams), "format_long_name": "Matroska / WebM", "duration": "5400.0"}
+    return json.dumps({"streams": streams, "format": fmt}).encode()
 
 
 @pytest.fixture()
@@ -22,11 +56,11 @@ def media_tree(tmp_path):
     root = tmp_path / "media"
     (root / "Extras").mkdir(parents=True)  # filtered directory
     files = {
-        "[2009] Avatar [4K].mkv": b"x" * 100,
-        "[2009] Avatar.mp4": b"y" * 50,
-        "[1999] Matrix.mkv": b"z" * 75,
+        "[2009] Avatar [4K].mkv": _probe_json((3840, 2160)),
+        "[2009] Avatar.mp4": _probe_json((1920, 1080)),
+        "[1999] Matrix.mkv": _probe_json((720, 480)),
         "notes.txt": b"not a video",
-        os.path.join("Extras", "[1999] Matrix.avi"): b"pruned",
+        os.path.join("Extras", "[1999] Matrix.avi"): _probe_json((1280, 720)),
     }
     for rel, content in files.items():
         (root / rel).write_bytes(content)
@@ -35,33 +69,17 @@ def media_tree(tmp_path):
 
 
 @pytest.fixture()
-def probe_fixture(spark, media_tree, tmp_path):
-    rows = []
-    for fname, w, h in [
-        ("[2009] Avatar [4K].mkv", 3840, 2160),
-        ("[2009] Avatar.mp4", 1920, 1080),
-        ("[1999] Matrix.mkv", 1280, 720),
-    ]:
-        rows.append(
-            (
-                os.path.join(media_tree, fname),
-                "H.264 / AVC", w, h, 2, "Matroska / WebM", 5400.0,
-                None, "AAC", 2, None,
-            )
-        )
-    path = str(tmp_path / "probe_fixture.parquet")
-    spark.createDataFrame(rows, PROBE_SCHEMA).write.parquet(path)
-    return path
+def ffprobe(tmp_path):
+    return _write_standin(tmp_path / "ffprobe")
 
 
-def test_cli_build_writes_sorted_db(spark, media_tree, probe_fixture, tmp_path, capsys):
+def test_cli_build_writes_sorted_db(spark, media_tree, ffprobe, tmp_path, capsys):
     out = str(tmp_path / "out")
-    rc = main([media_tree, "--output", out, "--probe-fixture", probe_fixture, "-v"])
+    rc = main([media_tree, "--output", out, "--ffprobe-bin", ffprobe, "-v"])
     assert rc == 0
     stdout = capsys.readouterr().out
     assert "db written" in stdout
     assert "Avatar" in stdout  # variant report found the 2-variant title
-    # stats come from the Observation riding the sink action (no extra pass)
     assert "files probed: 3, ok: 3, failed: 0" in stdout
 
     db = read_metadata_tsv(spark, os.path.join(out, "metadata_db.tsv"), header=True)
@@ -69,25 +87,25 @@ def test_cli_build_writes_sorted_db(spark, media_tree, probe_fixture, tmp_path, 
     # 3 videos probed; notes.txt filtered by extension; Extras/ pruned
     assert len(rows) == 3
     by_width = {r["Width"] for r in rows}
-    assert by_width == {"3840", "1920", "1280"}
+    assert by_width == {"3840", "1920", " 720"}  # "{:>4}" survives the write
     srt = [r for r in rows if r["Ext. English Subtitle Availability"] == "Y"]
     assert len(srt) == 1 and srt[0]["Ext. English Subtitle Size"] == "10"
 
 
-def test_cli_update_is_idempotent(spark, media_tree, probe_fixture, tmp_path, capsys):
+def test_cli_update_is_idempotent(spark, media_tree, ffprobe, tmp_path, capsys):
     out = str(tmp_path / "out")
-    assert main([media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    assert main([media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     # update with no new files appends nothing (SURVEY §5.4 property)
-    assert main(["-u", media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    assert main(["-u", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     assert "appended 0 new rows" in capsys.readouterr().out
     db = read_metadata_tsv(spark, os.path.join(tmp_path, "out", "metadata_db.tsv"), header=True)
     assert db.count() == 3
 
 
-def test_cli_merge_unions_and_sorts(spark, media_tree, probe_fixture, tmp_path):
+def test_cli_merge_unions_and_sorts(spark, media_tree, ffprobe, tmp_path):
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
     for out in (out_a, out_b):
-        assert main([media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+        assert main([media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     merged_dir = str(tmp_path / "m")
     rc = main([
         "-m",
@@ -115,77 +133,20 @@ def test_cli_merge_unions_and_sorts(spark, media_tree, probe_fixture, tmp_path):
 
 
 def _sort_line(r: list[str]) -> str:
-    """The whole line the sink sorts on, rebuilt from a written row: the
-    CSV writer trims the padded width/height and the single-space missing
-    subtitle sizes, and NULL audio cells are skipped in the sort key."""
+    """The whole line the sink sorts on, rebuilt from a written row:
+    width/height padded to 4 and missing subtitle sizes a single space
+    (as the boundary encodes them), NULL audio cells skipped."""
     f = list(r)
     f[0], f[1] = f[0].rjust(4), f[1].rjust(4)
     f[13], f[15] = f[13] or " ", f[15] or " "
     return "\t".join(v for i, v in enumerate(f) if v or i not in (9, 10))
 
 
-def test_cli_nomedia_markers(media_tree, probe_fixture, tmp_path, capsys):
+def test_cli_nomedia_markers(media_tree, ffprobe, tmp_path, capsys):
     out = str(tmp_path / "out")
-    rc = main(["-n", media_tree, "--output", out, "--probe-fixture", probe_fixture])
+    rc = main(["-n", media_tree, "--output", out, "--ffprobe-bin", ffprobe])
     assert rc == 0
     assert os.path.exists(os.path.join(media_tree, "Extras", ".nomedia"))
-
-
-def test_cli_no_audio_elides_probe_and_schema(spark, media_tree, tmp_path):
-    """--no-audio end-to-end (VERDICT r6 item 5): the parquet db drops
-    the audio columns AND the ffprobe invocation itself narrows to
-    `-select_streams v` — asserted through the fake binary's argv echo
-    (tags.title), i.e. at the real process boundary of the build-mode
-    plan, not just in ffprobe_args unit space.  (--ffprobe-bin, not a
-    PATH monkeypatch: executor workers inherit the JVM's env from
-    session start, so PATH edits in the test process never reach the
-    subprocess.)"""
-    import stat
-
-    from tests.test_probe_subprocess import _FAKE_FFPROBE
-
-    fakebin = tmp_path / "bin"
-    fakebin.mkdir()
-    p = fakebin / "ffprobe"
-    p.write_text(_FAKE_FFPROBE)
-    p.chmod(p.stat().st_mode | stat.S_IXUSR)
-
-    out = str(tmp_path / "out")
-    rc = main(
-        [media_tree, "--output", out, "--format", "parquet", "--no-audio",
-         "--ffprobe-bin", str(p)]
-    )
-    assert rc == 0
-    db = spark.read.parquet(os.path.join(out, "metadata_db.parquet"))
-    assert "audio_codec" not in db.columns
-    assert "audio_channels" not in db.columns
-    assert "video_codec" in db.columns and "width" in db.columns
-    rows = db.collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert "-select_streams v" in r["title"]  # argv echo from the fake
-
-
-def test_cli_no_audio_rejects_tsv_sink(media_tree, tmp_path):
-    """The reference TSV db format is fixed (18 columns, audio
-    included) — elision is a native-sink feature."""
-    with pytest.raises(SystemExit):
-        main([media_tree, "--output", str(tmp_path / "o"), "--no-audio"])
-
-
-def _counting_ffprobe(tmp_path) -> tuple[str, str]:
-    """The subprocess-test ffprobe stand-in, appending one byte to a
-    count file per invocation → (binary, count file)."""
-    import stat
-
-    from tests.test_probe_subprocess import _FAKE_FFPROBE
-
-    count = tmp_path / "probe_calls"
-    p = tmp_path / "ffprobe-counting"
-    shebang, body = _FAKE_FFPROBE.split("\n", 1)
-    p.write_text(f"{shebang}\nprintf . >> '{count}'\n{body}")
-    p.chmod(p.stat().st_mode | stat.S_IXUSR)
-    return str(p), str(count)
 
 
 def test_cli_probes_each_candidate_once(media_tree, tmp_path, capsys):
@@ -194,7 +155,8 @@ def test_cli_probes_each_candidate_once(media_tree, tmp_path, capsys):
     report and the -v variant report all reuse it."""
     with open(os.path.join(media_tree, "[2001] bad.mkv"), "wb") as f:
         f.write(b"b" * 20)  # the stand-in exits non-zero on "bad" paths
-    ffprobe, count = _counting_ffprobe(tmp_path)
+    count = str(tmp_path / "probe_calls")
+    ffprobe = _write_standin(tmp_path / "ffprobe-counting", count)
 
     def calls() -> int:
         return os.path.getsize(count) if os.path.exists(count) else 0
@@ -214,7 +176,7 @@ def test_cli_probes_each_candidate_once(media_tree, tmp_path, capsys):
     assert "files probed: 4, ok: 3, failed: 1" in stdout
 
 
-def test_cli_update_fails_on_unreadable_db(media_tree, probe_fixture, tmp_path):
+def test_cli_update_fails_on_unreadable_db(media_tree, ffprobe, tmp_path):
     """Only a missing db turns an update into a build; a db that exists
     but cannot be read must fail, never append every row again."""
     out = tmp_path / "out"
@@ -225,14 +187,14 @@ def test_cli_update_fails_on_unreadable_db(media_tree, probe_fixture, tmp_path):
 
     try:
         rc = main(["-u", "--format", "parquet", media_tree, "--output", str(out),
-                   "--probe-fixture", probe_fixture])
+                   "--ffprobe-bin", ffprobe])
     except Exception:
         rc = None
     assert rc != 0
     assert {p.name: p.read_bytes() for p in db.iterdir()} == before
 
 
-def test_cli_releases_its_caches(spark, media_tree, probe_fixture, tmp_path):
+def test_cli_releases_its_caches(spark, media_tree, ffprobe, tmp_path):
     """The listing cache and the persisted probe are released when main
     returns, so repeated in-process runs do not pile up cached blocks.
     (Compared by RDD id: the JVM holds persisted RDDs weakly, so one an
@@ -240,12 +202,12 @@ def test_cli_releases_its_caches(spark, media_tree, probe_fixture, tmp_path):
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     out = str(tmp_path / "out")
     before = set(persistent().keys())
-    assert main([media_tree, "--output", out, "--probe-fixture", probe_fixture, "-v"]) == 0
-    assert main(["-u", "-p", media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    assert main([media_tree, "--output", out, "--ffprobe-bin", ffprobe, "-v"]) == 0
+    assert main(["-u", "-p", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     assert set(persistent().keys()) - before == set()
 
 
-def test_cli_percentage_walks_the_tree_once(media_tree, probe_fixture, tmp_path, capsys, monkeypatch):
+def test_cli_percentage_walks_the_tree_once(media_tree, ffprobe, tmp_path, capsys, monkeypatch):
     """-p counts candidates from the listing the build already caches."""
     from video_metadata_db_spark.sources import listing
 
@@ -258,8 +220,61 @@ def test_cli_percentage_walks_the_tree_once(media_tree, probe_fixture, tmp_path,
 
     monkeypatch.setattr(listing, "list_files", counting_list_files)
     out = str(tmp_path / "out")
-    assert main(["-p", media_tree, "--output", out, "--probe-fixture", probe_fixture]) == 0
+    assert main(["-p", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     stdout = capsys.readouterr().out
     assert "files to probe: 3" in stdout
     assert "files probed: 3, ok: 3, failed: 0" in stdout
     assert len(walks) == 1
+
+
+def test_cli_dead_letters_every_probe_failure(spark, ffprobe, tmp_path, capsys):
+    """Each probe failure mode dead-letters and is counted: a non-zero
+    exit, output that is not JSON, output without a video stream, and a
+    file name that is not UTF-8.  Only the two good files reach the db.
+    (The timeout is covered by test_probe_subprocess.)"""
+    root = tmp_path / "faults"
+    root.mkdir()
+    (root / "good one.mkv").write_bytes(_probe_json((1920, 1080)))
+    (root / "good two.mp4").write_bytes(_probe_json((1280, 720)))
+    (root / "bad.mkv").write_bytes(_probe_json((640, 360)))  # the stand-in exits 1
+    (root / "garbage.mkv").write_bytes(b"\x00\xffnot json")
+    (root / "audio only.mkv").write_bytes(_probe_json(None))
+    with open(os.path.join(os.fsencode(root), b"caf\xe9.mkv"), "wb") as f:
+        f.write(_probe_json((640, 360)))
+
+    out = str(tmp_path / "out")
+    assert main([str(root), "--output", out, "--ffprobe-bin", ffprobe]) == 0
+    stdout = capsys.readouterr().out
+    assert "files probed: 6, ok: 2, failed: 4" in stdout
+    failures = stdout.split("failures:\n", 1)[1].splitlines()
+    for name in ("/bad.mkv", "/garbage.mkv", "/audio only.mkv: no video stream", "/caf"):
+        assert any(name in line for line in failures), name
+    db = read_metadata_tsv(spark, os.path.join(out, "metadata_db.tsv"), header=True)
+    assert sorted(os.path.basename(r["Path on Drive Label"]) for r in db.collect()) == [
+        "good one.mkv", "good two.mp4"
+    ]
+
+
+@pytest.mark.parametrize(
+    "files, flags, expect",
+    [
+        ({"notes.txt": b"not a video"}, [], "files probed: 0, ok: 0, failed: 0"),
+        ({"a.mkv": b"not json", "b.mp4": b"{truncated"}, [], "files probed: 2, ok: 0, failed: 2"),
+        ({}, ["-u"], "files probed: 0, ok: 0, failed: 0"),
+    ],
+    ids=["no_candidates", "all_fail", "update_empty"],
+)
+def test_cli_reports_when_no_probe_succeeds(ffprobe, tmp_path, capsys, files, flags, expect):
+    """A run with no successful probe still finishes and prints its
+    counts: a library without videos, one whose every video fails, and
+    an update over an empty library."""
+    root = tmp_path / "lib"
+    root.mkdir()
+    for name, content in files.items():
+        (root / name).write_bytes(content)
+    out = str(tmp_path / "out")
+    assert main([*flags, str(root), "--output", out, "--ffprobe-bin", ffprobe]) == 0
+    stdout = capsys.readouterr().out
+    assert expect in stdout
+    if flags:
+        assert "update: appended 0 new rows" in stdout

@@ -40,15 +40,31 @@ def test_observe_dead_letter_fraction(spark):
     assert got["failed_frac"] == 0.4
 
 
+def test_observe_dead_letter_on_empty_frame(spark):
+    """An empty frame has no failure fraction: failed_frac is NULL, and
+    reading the Observation returns instead of blocking on a metric
+    that failed to compute."""
+    import threading
+
+    df = spark.createDataFrame([], "id long, error string")
+    instrumented, obs = observe_dead_letter(df)
+    assert instrumented.count() == 0
+    got = {}
+    reader = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+    reader.start()
+    reader.join(timeout=60)
+    assert not reader.is_alive(), "Observation.get blocked"
+    assert got["n_rows"] == 0 and got["n_failed"] == 0
+    assert got["failed_frac"] is None
+
+
 def test_observe_probe_pipeline_end_to_end(spark):
-    """The §2.9 integration: fixture-probed listing instrumented at the
+    """The §2.9 integration: fixture probe results instrumented at the
     dead-letter split — failure stats come from the SAME job that
     produces the good rows."""
-    from video_metadata_db_spark.operators.probe import probe_from_fixture
     from video_metadata_db_spark.sources.fixtures import file_listing, probe_results
 
-    listing = file_listing(spark, n=200)
-    probed = probe_from_fixture(listing, probe_results(spark, listing))
+    probed = probe_results(spark, file_listing(spark, n=200))
     instrumented, obs = observe_dead_letter(probed)
     ok = instrumented.filter(F.col("error").isNull()).count()
     got = obs.get

@@ -1,5 +1,5 @@
 """End-to-end parity pipeline over the deterministic fixtures:
-listing → filter → (fixture) probe → sidecar join → typed records →
+listing → filter → probe results table → sidecar join → typed records →
 TSV boundary → sorted write → read-back → decode. Plus the merge /
 update properties from SURVEY.md §5.4.
 """
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from video_metadata_db_spark.functions.scalar import TITLE_NOT_SET, in_filtered_directory
 from video_metadata_db_spark.operators.parity import merge_metadata_dbs, update_new_files, variant_report
 from video_metadata_db_spark.operators.pipeline import build_metadata_records, filter_candidates
-from video_metadata_db_spark.operators.probe import probe_from_fixture
 from video_metadata_db_spark.schemas import TSV_HEADER
 from video_metadata_db_spark.sources import fixtures
 from video_metadata_db_spark.sources.tsv import (
@@ -35,8 +34,7 @@ def parts(spark):
 @pytest.fixture(scope="module")
 def built(spark, parts):
     listing, probes, sidecars = parts
-    probed = probe_from_fixture(filter_candidates(listing), probes)
-    records, dead = build_metadata_records(listing, probed, sidecars)
+    records, dead = build_metadata_records(listing, probes, sidecars)
     return records.cache(), dead.cache()
 
 
@@ -178,21 +176,18 @@ def test_list_files_prunes_and_keeps_loose_files(spark, tmp_path):
 def test_probe_videos_dead_letters_without_ffprobe(spark, tmp_path):
     """The REAL mapInPandas probe path: with no ffprobe on PATH every
     row returns an error struct — no task failure, schema intact."""
-    from video_metadata_db_spark.operators.probe import (
-        ffprobe_available,
-        probe_videos,
-    )
+    import shutil
+
+    from video_metadata_db_spark.operators.probe import probe_videos
     from video_metadata_db_spark.schemas import PROBE_SCHEMA
 
-    if ffprobe_available():  # covered by real-media tests elsewhere
-        import pytest
-
+    if shutil.which("ffprobe"):  # covered by real-media tests elsewhere
         pytest.skip("ffprobe present; this test pins the absent-binary path")
 
     f = tmp_path / "x.mkv"
     f.write_bytes(b"not a video")
     listing = spark.createDataFrame([(str(f),)], "path string")
-    out = probe_videos(listing, partitions=2)
+    out = probe_videos(listing)
     assert out.schema == PROBE_SCHEMA
     rows = out.collect()
     assert len(rows) == 1
@@ -239,59 +234,6 @@ def test_merge_with_schema_evolution(spark, built):
     assert merged.filter(F.col("sub_en_hi_size").isNull()).count() >= records.count()
 
 
-def test_ffprobe_invocation_narrows_with_fields():
-    """Probe elision (SURVEY §4 deferred rule, done as invocation
-    narrowing): audio fields unrequested -> -select_streams v; no
-    stream fields -> no -show_streams at all; full probe unchanged."""
-    from video_metadata_db_spark.operators.probe import ffprobe_args
-
-    full = ffprobe_args("/x.mkv")
-    assert "-show_streams" in full and "-select_streams" not in full
-
-    video_only = ffprobe_args("/x.mkv", frozenset({"width", "height", "duration_s"}))
-    i = video_only.index("-select_streams")
-    assert video_only[i + 1] == "v"
-
-    fmt_only = ffprobe_args("/x.mkv", frozenset({"duration_s", "container", "title"}))
-    assert "-show_streams" not in fmt_only and "-show_format" in fmt_only
-
-    audio_only = ffprobe_args("/x.mkv", frozenset({"audio_codec"}))
-    j = audio_only.index("-select_streams")
-    assert audio_only[j + 1] == "a"
-
-
-def test_probe_videos_fields_narrow_schema(spark):
-    """fields= narrows the output schema to path + fields + error, and
-    rejects unknown names."""
-    import pytest as _pytest
-
-    from video_metadata_db_spark.operators.probe import probe_videos
-
-    listing = spark.createDataFrame([("/a.mkv",), ("/b.mkv",)], "path string")
-    df = probe_videos(listing, fields=("width", "height"))
-    assert df.columns == ["path", "width", "height", "error"]
-    rows = df.collect()  # no ffprobe in container -> every row dead-letters
-    assert len(rows) == 2 and all(r["error"] for r in rows)
-
-    with _pytest.raises(KeyError):
-        probe_videos(listing, fields=("nope",))
-
-
-def test_records_build_from_any_narrowed_probe(spark, parts):
-    """Every PROBE_SCHEMA metadata field is elidable (ADVICE r7): a
-    probe narrowed away from e.g. title/duration_s — legitimate output
-    of probe_fields_for for a sink without those columns — must still
-    build records, not raise 'missing non-elidable columns'."""
-    listing, probes, sidecars = parts
-    probed = probe_from_fixture(filter_candidates(listing), probes)
-    for dropped in (("title", "duration_s"), ("n_streams", "container")):
-        narrowed = probed.drop(*dropped)
-        records, dead = build_metadata_records(listing, narrowed, sidecars)
-        assert records.count() > 0
-        for col in dropped:
-            assert col not in records.columns
-
-
 def test_corrupt_json_ingest_dead_letters(spark, tmp_path):
     """Malformed ingest rows must become dead-letter rows, not job
     failures (§2.9 at the SOURCE boundary): PERMISSIVE json reading
@@ -335,26 +277,3 @@ def test_corrupt_json_ingest_dead_letters(spark, tmp_path):
         assert len(bad_rows) == 2 and any("not json" in b for b in bad_rows)
     finally:
         df.unpersist()
-
-
-def test_probe_fields_for_narrows_to_video_streams():
-    """Sink-schema-driven elision (VERDICT r6 item 5): a sink without
-    audio columns yields a field set that makes ffprobe_args choose
-    `-select_streams v`; the full sink keeps the full probe."""
-    from video_metadata_db_spark.operators.probe import (
-        ffprobe_args,
-        probe_fields_for,
-    )
-    from video_metadata_db_spark.schemas import METADATA_SCHEMA
-
-    full_cols = [f.name for f in METADATA_SCHEMA.fields]
-    assert "audio_codec" in probe_fields_for(full_cols)
-    args_full = ffprobe_args("/x.mkv", frozenset(probe_fields_for(full_cols)))
-    assert "-select_streams" not in args_full
-
-    no_audio = [c for c in full_cols if c not in ("audio_codec", "audio_channels")]
-    fields = probe_fields_for(no_audio)
-    assert "audio_codec" not in fields and "video_codec" in fields
-    args = ffprobe_args("/x.mkv", frozenset(fields))
-    i = args.index("-select_streams")
-    assert args[i + 1] == "v"

@@ -2,12 +2,10 @@
 
 `tools/ann_phases.py` and `tools/components_phases.py` used to print
 their phase splits for a human to paste into PHASES.json, which meant
-the file carried no record of WHICH code produced the numbers; bench.py
-then embedded it into BENCH_DETAIL.json unconditionally, so a stale
-split could ride along next to a fresh headline bench.  `record_phases`
+the file carried no record of WHICH code produced the numbers, so a
+stale split could ride along next to fresh measurements.  `record_phases`
 merges a tool's entries into PHASES.json and stamps the current git
-commit + wall-clock; bench.py compares the stamp against its own HEAD
-and flags `provenance.stale` when they differ.
+commit + wall-clock, so a reader can compare the stamp against HEAD.
 """
 
 from __future__ import annotations
@@ -24,7 +22,7 @@ PHASES_PATH = REPO / "PHASES.json"
 #: Paths whose last-touching commit identifies "the code that produced
 #: the numbers".  Committing the measurement artifact itself (or docs)
 #: must not invalidate the measurement — only a code change can.
-CODE_PATHS = ("video_metadata_db_spark", "tools", "bench.py", "__spark_entry__.py")
+CODE_PATHS = ("video_metadata_db_spark", "tools", "__spark_entry__.py")
 
 
 def current_commit(repo: Path = REPO) -> str | None:

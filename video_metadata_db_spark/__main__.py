@@ -15,9 +15,8 @@ Flags (mirroring :856-905):
 
 Engine-side additions (no reference analogue):
     --output DIR        where db directories are written (default cwd)
-    --probe-fixture P   parquet of probe results keyed by path — the CI
-                        path when ffprobe is absent (PROBE_SCHEMA cols)
     --format tsv|parquet  sink format (parquet = the engine-native form)
+    --ffprobe-bin B     ffprobe executable (name on PATH or absolute path)
 
 Mode dispatch mirrors §3: build (default) = list → filter → probe →
 sidecar join → sorted TSV db; update = the same behind a
@@ -37,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -77,10 +77,6 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
     )
     parser.add_argument("--output", default=".", help="Output directory for db files")
     parser.add_argument(
-        "--probe-fixture", default=None,
-        help="Parquet of PROBE_SCHEMA rows to use instead of running ffprobe",
-    )
-    parser.add_argument(
         "--format", default="tsv", choices=("tsv", "parquet"), dest="sink_format",
         help="Database sink format (tsv = reference parity; parquet = native)",
     )
@@ -88,104 +84,46 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
         "--ffprobe-bin", default="ffprobe", dest="ffprobe_bin",
         help="ffprobe executable to invoke (name on PATH or absolute path)",
     )
-    parser.add_argument(
-        "--no-audio", action="store_true", dest="no_audio",
-        help=(
-            "Omit audio columns from the db; the ffprobe call itself "
-            "narrows to video streams (-select_streams v) — probe "
-            "elision at the process boundary"
-        ),
-    )
     parser.add_argument("paths", nargs="+", help="Directories to scan (or TSV dbs with -m)")
-    ns = parser.parse_args(argv)
-    if ns.no_audio and ns.sink_format != "parquet":
-        # the reference TSV db is a FIXED 18-column format (audio
-        # columns included) — elision only narrows the native sink
-        parser.error("--no-audio requires --format parquet "
-                     "(the TSV db format is fixed by reference parity)")
-    return ns
-
-
-def _probe(
-    spark: SparkSession,
-    candidates: DataFrame,
-    fixture: str | None,
-    fields: tuple[str, ...] | None = None,
-    ffprobe_bin: str = "ffprobe",
-) -> DataFrame:
-    import shutil
-
-    from .operators.probe import probe_from_fixture, probe_videos
-
-    if fixture:
-        probed = probe_from_fixture(candidates, spark.read.parquet(fixture))
-        if fields is not None:  # fixture rows carry every column; narrow
-            probed = probed.select("path", *fields, "error")
-        return probed
-    if shutil.which(ffprobe_bin) is None:
-        print(
-            f"warning: {ffprobe_bin} not found — all rows will dead-letter "
-            "(pass --probe-fixture for a fixture-driven run)",
-            file=sys.stderr,
-        )
-    return probe_videos(candidates, fields=fields, ffprobe_bin=ffprobe_bin)
+    return parser.parse_args(argv)
 
 
 @contextmanager
 def _build_records(
     spark: SparkSession,
     roots: list[str],
-    fixture: str | None,
-    no_audio: bool = False,
     ffprobe_bin: str = "ffprobe",
-) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, "Observation"]]:
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, dict]]:
     """list → filter → probe → sidecar join → (candidates, records,
-    dead_letter, probe-stats observation), released on exit.
+    dead_letter, probe stats), released on exit.
 
-    The probe output is persisted *below* the ``Observation`` (reference:
-    the run summary + ``-p`` progress counters, video_metadata_db.py:
-    456-535, :1293-1315), so the first action both materializes it and
-    brings back the total/failed counts.  Every later action — update's
-    count, the sink, the dead-letter and variant reports — reads those
-    rows instead of launching ffprobe again.  The listing is cached the
-    same way: candidates, sidecars and the ``-p`` headcount share one
-    walk.  Both caches are released when the ``with`` block exits.
-
-    ``no_audio`` drops the audio columns from the sink schema and
-    propagates the narrowed field set down to the ffprobe invocation
-    (probe elision — ``probe_fields_for``): the audio dissection the
-    reference always pays is skipped at the process boundary.
+    The probe output is persisted and materialized at once by the one
+    aggregate that counts probed and failed files (reference: the run
+    summary + ``-p`` progress counters, video_metadata_db.py:456-535,
+    :1293-1315).  Every later action — update's count, the sink, the
+    dead-letter and variant reports — reads those rows instead of
+    launching ffprobe again.  The listing is cached the same way:
+    candidates, sidecars and the ``-p`` headcount share one walk.  Both
+    caches are released when the ``with`` block exits.
     """
-    from pyspark.sql import Observation
-
     from .operators.pipeline import build_metadata_records, filter_candidates
-    from .operators.probe import probe_fields_for
-    from .schemas import METADATA_SCHEMA
+    from .operators.probe import probe_videos
     from .sources.listing import list_files
 
-    fields = None
-    if no_audio:
-        sink_cols = [
-            f.name
-            for f in METADATA_SCHEMA.fields
-            if f.name not in ("audio_codec", "audio_channels")
-        ]
-        fields = probe_fields_for(sink_cols)
-
+    if shutil.which(ffprobe_bin) is None:
+        print(f"warning: {ffprobe_bin} not found — all rows will dead-letter", file=sys.stderr)
     listing = list_files(spark, roots, volume_label=_volume_label(roots)).cache()
     try:
         candidates = filter_candidates(listing, assume_pruned=True)
-        probed = _probe(spark, candidates, fixture, fields, ffprobe_bin).persist()
+        probed = probe_videos(candidates, ffprobe_bin=ffprobe_bin).persist()
         try:
-            obs = Observation("probe_stats")
-            observed = probed.observe(
-                obs,
+            stats = probed.agg(
                 F.count(F.lit(1)).alias("n_probed"),
                 F.count(F.col("error")).alias("n_failed"),
-            )
+            ).first().asDict()
             sidecars = listing.filter(F.col("name").rlike(r"\.srt$")).select("path", "size_bytes")
-            records, dead = build_metadata_records(listing, observed, sidecars, assume_pruned=True)
-            yield candidates, records, dead, obs
+            records, dead = build_metadata_records(listing, probed, sidecars, assume_pruned=True)
+            yield candidates, records, dead, stats
         finally:
             probed.unpersist()
     finally:
@@ -219,7 +157,7 @@ def _write(records: DataFrame, out_dir: str, fmt: str, mode: str) -> str:
 
 
 def _report(stats: dict, dead: DataFrame, records: DataFrame, verbose: bool) -> None:
-    n_total, n_fail = stats.get("n_probed", 0), stats.get("n_failed", 0)
+    n_total, n_fail = stats["n_probed"], stats["n_failed"]
     print(f"files probed: {n_total}, ok: {n_total - n_fail}, failed: {n_fail}")
     if n_fail:
         print("failures:")
@@ -264,13 +202,7 @@ def main(argv: list[str] | None = None) -> int:
         created = create_nomedia_markers(filtered_dirs(spark, args.paths))
         print(f".nomedia markers: {created.filter(F.col('status') == 'created').count()} created")
 
-    with _build_records(
-        spark,
-        args.paths,
-        args.probe_fixture,
-        no_audio=args.no_audio,
-        ffprobe_bin=args.ffprobe_bin,
-    ) as (candidates, records, dead, obs):
+    with _build_records(spark, args.paths, args.ffprobe_bin) as (candidates, records, dead, stats):
         if args.percentage:
             # two-pass headcount (:1545-1568) — one count over the cached listing
             print(f"files to probe: {candidates.count()}")
@@ -294,11 +226,11 @@ def main(argv: list[str] | None = None) -> int:
             if n_new:
                 _write(records, args.output, args.sink_format, mode="append")
             print(f"update: appended {n_new} new rows")
-            _report(obs.get, dead, records, args.verbose)
+            _report(stats, dead, records, args.verbose)
             return 0
 
         path = _write(records, args.output, args.sink_format, mode="overwrite")
-        _report(obs.get, dead, records, args.verbose)
+        _report(stats, dead, records, args.verbose)
         print(f"db written: {path}")
         return 0
 

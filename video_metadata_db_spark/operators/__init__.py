@@ -46,7 +46,7 @@ from .parity import (
 )
 from .pipeline import build_metadata_records, filter_candidates, join_sidecars
 from .quantization import ivf_adc_topk, pq_adc_topk, pq_codebooks, pq_encode
-from .probe import ffprobe_args, ffprobe_available, probe_from_fixture, probe_videos
+from .probe import probe_videos
 from .skew import salted_join, top_frequency_keys, two_stage_distinct_count
 
 __all__ = [
@@ -71,8 +71,6 @@ __all__ = [
     "kmeans_assign",
     "kmeans_assign_arrow",
     "extract_features",
-    "ffprobe_args",
-    "ffprobe_available",
     "filter_candidates",
     "global_row_number",
     "join_sidecars",
@@ -88,7 +86,6 @@ __all__ = [
     "ivf_adc_topk",
     "pq_codebooks",
     "pq_encode",
-    "probe_from_fixture",
     "probe_videos",
     "release_dedup_caches",
     "resize_images",

@@ -52,5 +52,7 @@ def observe_dead_letter(
         "dead_letter",
         F.count(F.lit(1)).alias("n_rows"),
         F.count(error_col).alias("n_failed"),
-        F.round(F.count(error_col) / F.count(F.lit(1)), 6).alias("failed_frac"),
+        # try_divide: an empty frame yields NULL instead of an ANSI
+        # divide-by-zero inside the listener, which never fills obs.get
+        F.round(F.try_divide(F.count(error_col), F.count(F.lit(1))), 6).alias("failed_frac"),
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import in_filtered_directory, is_video_file, sidecar_path
-from ..schemas import METADATA_SCHEMA, PROBE_SCHEMA
+from ..schemas import METADATA_SCHEMA
 
 
 def filter_candidates(listing: DataFrame, assume_pruned: bool = False) -> DataFrame:
@@ -78,21 +78,7 @@ def build_metadata_records(
     dead_letter = joined.filter(F.col("error").isNotNull()).select("path", "error")
     ok = joined.filter(F.col("error").isNull())
     with_subs = join_sidecars(ok, sidecars)
-    # a NARROWED probe (probe_videos(fields=...), the elision path)
-    # legitimately shrinks the record schema by the elided probe
-    # fields; anything else missing is a wiring bug and raises.  The
-    # elidable set is every PROBE_SCHEMA metadata field — exactly what
-    # probe_fields_for may drop — so a sink that elides e.g. title or
-    # duration_s is as legitimate as one eliding the audio columns.
-    elidable = {
-        f.name for f in PROBE_SCHEMA.fields if f.name not in ("path", "error")
-    }
-    renamed = with_subs.withColumnRenamed("size_bytes", "raw_size")
-    available = set(renamed.columns)
-    record_cols = [f.name for f in METADATA_SCHEMA.fields if f.name in available]
-    missing = [f.name for f in METADATA_SCHEMA.fields if f.name not in available]
-    bad = [c for c in missing if c not in elidable]
-    if bad:
-        raise ValueError(f"records missing non-elidable columns: {bad}")
-    records = renamed.select(*record_cols, "name")
+    records = with_subs.withColumnRenamed("size_bytes", "raw_size").select(
+        *[f.name for f in METADATA_SCHEMA.fields], "name"
+    )
     return records, dead_letter

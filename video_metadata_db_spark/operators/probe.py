@@ -13,81 +13,27 @@ Failures never kill the job: the returned struct carries an ``error``
 column (dead-letter channel, ``:635-676``); downstream splits on
 ``error IS NULL``.
 
-This container has no ffprobe and no media files, so tests inject probe
-results as a DataFrame (``probe_from_fixture``) — the FIXTURES.md A.2
-contract.  The subprocess path is real code, exercised wherever ffprobe
-exists.
+This is the only probe path: tests and the benchmark drive it through
+an ``ffprobe_bin`` stand-in that prints the probed file's bytes, so the
+same ``subprocess.run`` code runs with or without a real ffprobe.
 """
 
 from __future__ import annotations
 
 import json
-import shutil
 import subprocess
 from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..schemas import PROBE_SCHEMA
 
 FFPROBE_TIMEOUT_S = 30
 
-#: Fields sourced from stream entries (vs format-level fields).
-_VIDEO_FIELDS = frozenset({"video_codec", "width", "height"})
-_AUDIO_FIELDS = frozenset({"audio_codec", "audio_channels"})
-
-
-def ffprobe_available() -> bool:
-    return shutil.which("ffprobe") is not None
-
-
-def probe_fields_for(sink_cols) -> tuple[str, ...]:
-    """The probe-elision field set for a sink schema: every
-    PROBE_SCHEMA metadata field the sink actually keeps (``path`` and
-    ``error`` always ride along).  Feeding the result to
-    :func:`probe_videos` narrows the ffprobe invocation itself
-    (:func:`ffprobe_args`): a sink without audio columns skips audio
-    stream dissection at the process boundary (``-select_streams v``)
-    — SURVEY §4's probe-call-elision rule wired from the sink schema
-    down (VERDICT r6 item 5)."""
-    keep = set(sink_cols)
-    return tuple(
-        f.name
-        for f in PROBE_SCHEMA.fields
-        if f.name not in ("path", "error") and f.name in keep
-    )
-
-
-def ffprobe_args(
-    path: str,
-    fields: frozenset[str] | None = None,
-    ffprobe_bin: str = "ffprobe",
-) -> list[str]:
-    """The ffprobe command for a field subset — probe-call elision as
-    invocation narrowing (SURVEY §4's deferred rule, done as the cheap
-    proxy it suggests): audio fields unrequested → ``-select_streams v``
-    (ffprobe skips audio stream dissection); no stream fields at all →
-    drop ``-show_streams`` entirely (format header only).  Pure function
-    so the narrowing is unit-testable without ffprobe in the container.
-    """
-    need_video = fields is None or bool(fields & _VIDEO_FIELDS)
-    need_audio = fields is None or bool(fields & _AUDIO_FIELDS)
-    args = [ffprobe_bin, "-v", "error", "-print_format", "json"]
-    if need_video or need_audio:
-        args += ["-show_streams"]
-        if not need_audio:
-            args += ["-select_streams", "v"]
-        elif not need_video:
-            args += ["-select_streams", "a"]
-    args += ["-show_format", "-i", path]
-    return args
-
 
 def _probe_one(
     path: str,
-    fields: frozenset[str] | None = None,
     ffprobe_bin: str = "ffprobe",
     timeout_s: float = FFPROBE_TIMEOUT_S,
 ) -> dict[str, Any]:
@@ -96,12 +42,14 @@ def _probe_one(
     Field mapping mirrors the reference's two probes: format-level
     ``nb_streams``/``format_long_name``/``duration``/``tags.title`` and
     the first video/audio stream's codec/width/height/channels
-    (video_metadata_db.py:596-634).
+    (video_metadata_db.py:596-634).  Output without a video stream
+    dead-letters like any other probe failure.
     """
     out: dict[str, Any] = {"path": path, "error": None}
     try:
         proc = subprocess.run(
-            ffprobe_args(path, fields, ffprobe_bin),
+            [ffprobe_bin, "-v", "error", "-print_format", "json",
+             "-show_streams", "-show_format", "-i", path],
             capture_output=True,
             timeout=timeout_s,
             check=False,
@@ -112,7 +60,10 @@ def _probe_one(
         data = json.loads(proc.stdout.decode("utf-8", "replace"))
         fmt = data.get("format", {})
         streams = data.get("streams", [])
-        video = next((s for s in streams if s.get("codec_type") == "video"), {})
+        video = next((s for s in streams if s.get("codec_type") == "video"), None)
+        if video is None:
+            out["error"] = "no video stream"
+            return out
         audio = next((s for s in streams if s.get("codec_type") == "audio"), {})
         dur = fmt.get("duration")
         out.update(
@@ -136,68 +87,20 @@ def _probe_one(
 
 def probe_videos(
     listing: DataFrame,
-    partitions: int | None = None,
-    fields: tuple[str, ...] | None = None,
     ffprobe_bin: str = "ffprobe",
     timeout_s: float = FFPROBE_TIMEOUT_S,
 ) -> DataFrame:
-    """Probe every listed path with ffprobe → PROBE_SCHEMA rows (or the
-    ``fields`` subset + path/error).
-
-    ``repartition`` first: probe cost is per-file wall time, so spread
-    paths evenly regardless of how the listing was produced.  At cluster
-    scale set ``partitions`` ≈ 2-4× total cores (I/O-bound, same logic
-    as the reference's 4× thread fan-out).
-
-    ``fields`` is the probe-elision dial: mapInPandas output can't be
-    column-pruned by Catalyst (the UDF is opaque), so a consumer that
-    needs only video columns passes them here and the ffprobe call
-    itself narrows (``ffprobe_args``) — the audio dissection the
-    reference always pays (video_metadata_db.py:617-634) is skipped at
-    the process boundary, the only level that matters for an external
-    probe.
-    """
+    """Probe every listed path with ffprobe → PROBE_SCHEMA rows, one
+    ffprobe call per path, on the listing's partitions."""
     import pandas as pd
 
-    from pyspark.sql import types as T
-
-    if fields is None:
-        schema, fset = PROBE_SCHEMA, None
-    else:
-        unknown = set(fields) - {f.name for f in PROBE_SCHEMA.fields}
-        if unknown:
-            raise KeyError(f"unknown probe fields: {sorted(unknown)}")
-        keep = {"path", *fields, "error"}
-        schema = T.StructType([f for f in PROBE_SCHEMA.fields if f.name in keep])
-        fset = frozenset(fields)
-    cols = [f.name for f in schema.fields]
+    cols = [f.name for f in PROBE_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # ffprobe_bin/timeout_s are captured in this closure, so they
         # ship to executors with the serialized task — no env plumbing
         for pdf in batches:
-            rows = [_probe_one(p, fset, ffprobe_bin, timeout_s) for p in pdf["path"]]
+            rows = [_probe_one(p, ffprobe_bin, timeout_s) for p in pdf["path"]]
             yield pd.DataFrame(rows, columns=cols)
 
-    src = listing.select("path")
-    if partitions:
-        src = src.repartition(partitions)
-    return src.mapInPandas(run, schema)
-
-
-def probe_from_fixture(listing: DataFrame, probe_results: DataFrame) -> DataFrame:
-    """CI path: probe results come from a table, joined on path.
-
-    Left join keeps listing rows with no probe row (they surface as
-    all-NULL metadata + an error marker, like a failed probe).
-    """
-    probed = listing.select("path").join(probe_results, "path", "left")
-    return probed.withColumn(
-        "error",
-        F.when(
-            F.col("error").isNotNull(), F.col("error")
-        ).when(
-            F.col("video_codec").isNull() & F.col("width").isNull() & F.col("container").isNull(),
-            F.lit("no probe result for path"),
-        ),
-    ).select(*[f.name for f in PROBE_SCHEMA.fields])
+    return listing.select("path").mapInPandas(run, PROBE_SCHEMA)

@@ -4,7 +4,7 @@ CI has no media files and no ffprobe, so the parity pipeline's inputs —
 file listing, probe results, subtitle sidecars — are generated tables
 (seed fixed, no wall clock).  Shapes and edge-case quotas follow
 FIXTURES.md A.1-A.3: filtered directories, non-video and UPPERCASE
-extensions, missing dimensions, ``N/A`` durations, no-audio rows,
+extensions, missing dimensions, ``N/A`` durations, audio-less rows,
 probe failures, orphan sidecars, non-ASCII names.
 """
 
@@ -79,7 +79,7 @@ def probe_results(spark: SparkSession, listing: DataFrame) -> DataFrame:
         w, h = rng.choice(_DIMS)
         if rng.random() < 0.05:
             h = None
-        no_audio = rng.random() < 0.12
+        silent = rng.random() < 0.12
         rows.append(
             (
                 p,
@@ -90,8 +90,8 @@ def probe_results(spark: SparkSession, listing: DataFrame) -> DataFrame:
                 rng.choice(_CONTAINERS),
                 rng.choice(_DURATIONS),
                 rng.choice(_TITLES),
-                None if no_audio else "AAC (Advanced Audio Coding)",
-                None if no_audio else rng.choice([1, 2, 6, 8]),
+                None if silent else "AAC (Advanced Audio Coding)",
+                None if silent else rng.choice([1, 2, 6, 8]),
                 None,
             )
         )

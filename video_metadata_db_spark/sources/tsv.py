@@ -112,6 +112,10 @@ def write_boundary_tsv(
         .option("header", str(header).lower())
         .option("emptyValue", "")
         .option("nullValue", "")
+        # the writer trims cells by default, which would undo the "{:>4}"
+        # padding and the single-space missing subtitle sizes
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
         .csv(path)
     )
 
