@@ -117,8 +117,9 @@ def assert_dtype_classes_match(sdf, oracle_sql: str, conn, name: str) -> None:
     )
 
 
-def compare_query(spark, name: str, sf_dir: str) -> None:
-    """Assert Spark result == oracle result for a registered query."""
+def compare_query(spark, name: str, sf_dir: str) -> int:
+    """Assert Spark result == oracle result for a registered query;
+    return the Spark row count."""
     from video_metadata_db_spark.plans import ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, sf_dir)
@@ -147,3 +148,4 @@ def compare_query(spark, name: str, sf_dir: str) -> None:
         raise AssertionError(
             f"{name}: value mismatch\n only-spark: {diff_s}\n only-duck:  {diff_d}"
         )
+    return len(spark_rows)

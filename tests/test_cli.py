@@ -207,24 +207,39 @@ def test_cli_releases_its_caches(spark, media_tree, ffprobe, tmp_path):
     assert set(persistent().keys()) - before == set()
 
 
-def test_cli_percentage_walks_the_tree_once(media_tree, ffprobe, tmp_path, capsys, monkeypatch):
+@pytest.fixture()
+def walks(monkeypatch):
+    """The root of every ``os.walk`` started while the test runs."""
+    roots = []
+    walk = os.walk
+
+    def counting_walk(top, *args, **kwargs):
+        roots.append(top)
+        return walk(top, *args, **kwargs)
+
+    monkeypatch.setattr(os, "walk", counting_walk)
+    return roots
+
+
+def test_cli_percentage_walks_the_tree_once(media_tree, ffprobe, tmp_path, capsys, walks):
     """-p counts candidates from the listing the build already caches."""
-    from video_metadata_db_spark.sources import listing
-
-    walks = []
-    list_files = listing.list_files
-
-    def counting_list_files(*args, **kwargs):
-        walks.append(args[1])
-        return list_files(*args, **kwargs)
-
-    monkeypatch.setattr(listing, "list_files", counting_list_files)
     out = str(tmp_path / "out")
     assert main(["-p", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
     stdout = capsys.readouterr().out
     assert "files to probe: 3" in stdout
     assert "files probed: 3, ok: 3, failed: 0" in stdout
-    assert len(walks) == 1
+    assert walks == [media_tree]
+
+
+def test_cli_nomedia_walks_the_tree_once(media_tree, ffprobe, tmp_path, capsys, walks):
+    """-n takes its marker directories from the walk that lists the
+    library, not from a second walk with its own prune rule."""
+    out = str(tmp_path / "out")
+    assert main(["-n", media_tree, "--output", out, "--ffprobe-bin", ffprobe]) == 0
+    stdout = capsys.readouterr().out
+    assert ".nomedia markers: 1 created" in stdout
+    assert "files probed: 3, ok: 3, failed: 0" in stdout
+    assert walks == [media_tree]
 
 
 def test_cli_dead_letters_every_probe_failure(spark, ffprobe, tmp_path, capsys):

@@ -117,16 +117,15 @@ def test_nomedia_markers(spark, tmp_path):
     in filtered dirs, idempotent on rerun, results reported as rows."""
     import os
 
-    from video_metadata_db_spark.sources.sideeffects import (
-        create_nomedia_markers,
-        filtered_dirs,
-    )
+    from video_metadata_db_spark.sources.listing import list_library
+    from video_metadata_db_spark.sources.sideeffects import create_nomedia_markers
 
     root = tmp_path / "media"
     for d in ("Movies/Extras", "Movies/Collection 1", "Movies/@eaDir"):
         (root / d).mkdir(parents=True)
-    dirs = filtered_dirs(spark, [str(root)])
-    got = {r["dir_path"] for r in dirs.collect()}
+    _, filtered = list_library(spark, [str(root)])
+    got = set(filtered)
+    dirs = spark.createDataFrame([(d,) for d in filtered], "dir_path string")
     assert got == {str(root / "Movies/Extras"), str(root / "Movies/@eaDir")}
 
     first = {r["dir_path"]: r["status"] for r in create_nomedia_markers(dirs).collect()}

@@ -234,6 +234,29 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
     assert written.select(F.sum("value")).first()[0] == sum(float(i) for i in range(100))
 
 
+@pytest.mark.parametrize(
+    "drain",
+    [
+        lambda df, cp, out: run_available_now(df, cp, timeout_s=0.05),
+        lambda df, cp, out: run_available_now_to_parquet(df, cp, out, timeout_s=0.05),
+        lambda df, cp, out: run_foreach_batch(df, cp, lambda b, i: b.count(), timeout_s=0.05),
+    ],
+    ids=["memory", "parquet", "foreach_batch"],
+)
+def test_drain_timeout_stops_the_query_and_raises(spark, tmp_path, drain):
+    """A drain that outlives its timeout must neither hand back a
+    half-filled sink nor leave its query running: 20 one-file
+    micro-batches cannot finish in 50 ms."""
+    src, cp, out = str(tmp_path / "src"), str(tmp_path / "cp"), str(tmp_path / "out")
+    rows = [(i, _t(10, i % 60), "a", float(i)) for i in range(100)]
+    spark.createDataFrame(rows, EVENT_SCHEMA).repartition(20).write.parquet(src)
+
+    stream = file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
+    with pytest.raises(TimeoutError):
+        drain(stream, cp, out)
+    assert spark.streams.active == []
+
+
 def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
     """The cluster-scale state backend: RocksDB spills dedup state to
     local disk, so state size is bounded by storage, not executor heap

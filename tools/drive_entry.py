@@ -1,8 +1,9 @@
 """Driver simulation per .claude/skills/verify: fresh-process entry smoke
 + every queries() entry vs its DuckDB oracle at sf0.01."""
 import sys, math, datetime as dt
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as e
 import duckdb
 from pyspark.sql import SparkSession

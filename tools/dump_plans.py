@@ -123,8 +123,8 @@ def main() -> None:
         "  executes is the 20-scan scored tree ONCE to fill the cache, and",
         "  cache reads for the other two references (the r5 form executed the",
         "  39-scan tree with no reuse).",
-        "- `dedup_components_incremental` phase split (tools/components_phases.py,",
-        "  sf0.1, best of 2): **premise build 6.04 s** (SimHash pair generation",
+        "- `dedup_components_incremental` phase split (sf0.1, best of 2):",
+        "  **premise build 6.04 s** (SimHash pair generation",
         "  over the whole corpus + the full star run constructing the stored",
         "  old-corpus labels the scenario assumes already exist) vs",
         "  **incremental merge 2.56 s** (what a per-ingest run actually pays).",
@@ -142,16 +142,15 @@ def main() -> None:
         "",
         "Round-7 measurements (VERDICT r6 items 3-4):",
         "",
-        "- ANN phase split (tools/ann_phases.py, sf0.1, best of 2; the",
-        "  committed record is PHASES.json, also embedded in",
-        "  BENCH_DETAIL.json under 'phases'): the registered ADC queries",
+        "- ANN phase split (sf0.1, best of 2; recorded in BENCH_DETAIL.json",
+        "  under 'phases'): the registered ADC queries",
         "  price a ONE-TIME index build inside the timed query.",
         "  `pq_adc_topk`: **index build 1.95 s** (Lloyd's codebooks +",
         "  corpus encode) vs **search 2.79 s**; `ivf_adc_topk`: **build",
         "  1.79 s** vs **search 2.32 s** (incl. the coarse list",
         "  assignment join).  Steady-state per-query ANN cost is the",
-        "  search phase; both operators take pretrained `books`/`codes`",
-        "  so a caller with a stored index pays it alone.",
+        "  search phase; both operators train their codebooks inline, so",
+        "  every call pays the build as well.",
         "- `dedup_jaccard_prefix` number reconciliation: the committed",
         "  claim is the ENVELOPE 4.9-5.7 s warm at sf0.1 (best-of-5",
         "  standalone 5.6 s at both 32 and 128 shuffle partitions;",

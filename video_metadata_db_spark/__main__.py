@@ -25,10 +25,11 @@ whole-line sort + header (:1361-1456).  Every stage is a DataFrame —
 the thread pool, the five mutexes, and the external OS ``sort`` of the
 reference have no equivalent here by design.
 
-One invocation walks the tree once and runs ffprobe once per candidate:
-the listing is cached and the probe output is persisted, so the ``-p``
-headcount, update's count, the sorted sink, the dead-letter report and
-the ``-v`` variant report all read the same rows.  Both are released
+One invocation walks the tree once and runs ffprobe once per candidate.
+The walk also yields the filtered directories the ``-n`` markers go
+into.  The listing is cached and the probe output is persisted, so the
+``-p`` headcount, update's count, the sorted sink, the dead-letter report
+and the ``-v`` variant report all read the same rows.  Both are released
 before ``main`` returns.
 """
 
@@ -41,7 +42,7 @@ import sys
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -90,11 +91,10 @@ def _parse_args(argv: list[str]) -> argparse.Namespace:
 
 @contextmanager
 def _build_records(
-    spark: SparkSession,
-    roots: list[str],
+    listing: DataFrame,
     ffprobe_bin: str = "ffprobe",
 ) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, dict]]:
-    """list → filter → probe → sidecar join → (candidates, records,
+    """listing → filter → probe → sidecar join → (candidates, records,
     dead_letter, probe stats), released on exit.
 
     The probe output is persisted and materialized at once by the one
@@ -108,11 +108,10 @@ def _build_records(
     """
     from .operators.pipeline import build_metadata_records, filter_candidates
     from .operators.probe import probe_videos
-    from .sources.listing import list_files
 
     if shutil.which(ffprobe_bin) is None:
         print(f"warning: {ffprobe_bin} not found — all rows will dead-letter", file=sys.stderr)
-    listing = list_files(spark, roots, volume_label=_volume_label(roots)).cache()
+    listing = listing.cache()
     try:
         candidates = filter_candidates(listing, assume_pruned=True)
         probed = probe_videos(candidates, ffprobe_bin=ffprobe_bin).persist()
@@ -196,13 +195,17 @@ def main(argv: list[str] | None = None) -> int:
         print(f"merged {len(dbs)} dbs -> {out}")
         return 0
 
-    if args.nomedia:
-        from .sources.sideeffects import create_nomedia_markers, filtered_dirs
+    from .sources.listing import list_library
 
-        created = create_nomedia_markers(filtered_dirs(spark, args.paths))
+    listing, filtered = list_library(spark, args.paths, volume_label=_volume_label(args.paths))
+    if args.nomedia:
+        from .sources.sideeffects import create_nomedia_markers
+
+        dirs = spark.createDataFrame([(d,) for d in filtered], "dir_path string")
+        created = create_nomedia_markers(dirs)
         print(f".nomedia markers: {created.filter(F.col('status') == 'created').count()} created")
 
-    with _build_records(spark, args.paths, args.ffprobe_bin) as (candidates, records, dead, stats):
+    with _build_records(listing, args.ffprobe_bin) as (candidates, records, dead, stats):
         if args.percentage:
             # two-pass headcount (:1545-1568) — one count over the cached listing
             print(f"files to probe: {candidates.count()}")

@@ -202,8 +202,6 @@ def pq_adc_topk(
     round_dp: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    books: list[list[list[float]]] | None = None,
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance top-k: (query_id, cand_id, approx_sq_dist),
     the ``topk`` nearest code-compressed candidates per query (queries
@@ -211,18 +209,10 @@ def pq_adc_topk(
 
     The per-(query, subspace) distance tables are built as tiny
     DataFrames — |queries| × k rows each — and BROADCAST onto the codes
-    table; after encoding, search never touches a full vector.
-
-    ``books``/``codes`` are the steady-state search entry: pass a
-    pretrained index (codebooks + encoded code table) and only the ADC
-    search is priced — codebook training is a one-time index build, so
-    the bench phase split (``tools/ann_phases.py``, VERDICT r6 item 4)
-    times the two separately."""
+    table; after encoding, search never touches a full vector."""
     spark = emb.sparkSession
-    if books is None:
-        books = pq_codebooks(emb, m, k, n_iter, dim, id_col, vec_col)
-    if codes is None:
-        codes = pq_encode(emb, books, id_col, vec_col)
+    books = pq_codebooks(emb, m, k, n_iter, dim, id_col, vec_col)
+    codes = pq_encode(emb, books, id_col, vec_col)
     sub_dim = dim // m
 
     queries = emb.filter(F.col(id_col).isin(query_ids))
@@ -281,8 +271,6 @@ def ivf_adc_topk(
     round_dp: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    books: list[list[list[float]]] | None = None,
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC (Jégou et al. §V): the inverted-file coarse quantizer
     restricts WHICH candidates are scored, product-quantization codes
@@ -314,12 +302,8 @@ def ivf_adc_topk(
         (r[id_col], list(r["v"]))
         for r in e.filter(F.col(id_col).isin(centroid_ids)).collect()
     )
-    # books/codes: steady-state search entry (see pq_adc_topk) — a
-    # pretrained index skips Lloyd's + encoding, pricing search alone
-    if books is None:
-        books = pq_codebooks(emb, m, k, n_iter, dim, id_col, vec_col)
-    if codes is None:
-        codes = pq_encode(emb, books, id_col, vec_col)
+    books = pq_codebooks(emb, m, k, n_iter, dim, id_col, vec_col)
+    codes = pq_encode(emb, books, id_col, vec_col)
     corpus = (
         ivf_assign(
             e.filter(~F.col(id_col).isin(query_ids)),

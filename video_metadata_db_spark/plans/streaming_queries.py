@@ -42,12 +42,12 @@ def _stage_sentinel(path: str, schema: StructType, rows: list[tuple]) -> None:
     micro-batch and advance the watermark; staging it through
     ``spark.createDataFrame(...).repartition(1).write`` costs a full
     Spark job (~0.3-0.5 s of pure scheduling per streaming query —
-    measured in the r12 staging/drain phase split, tools/
-    stream_phases.py).  A driver-side pyarrow write is the same bytes
-    with zero jobs.  Written AFTER the reals' write job returns, so its
-    modification time is strictly later and the file source's
-    oldest-first ordering (maxFilesPerTrigger=1) still delivers it in
-    its own trailing batch.  Timestamps are written as tz-aware UTC
+    measured in the r12 staging/drain phase split).  A driver-side
+    pyarrow write is the same bytes with zero jobs.  Written AFTER the
+    reals' write job returns, so its modification time is strictly
+    later and the file source's oldest-first ordering
+    (maxFilesPerTrigger=1) still delivers it in its own trailing
+    batch.  Timestamps are written as tz-aware UTC
     micros (isAdjustedToUTC=true), which Spark's parquet reader maps to
     TimestampType exactly like its own INT96/INT64 output.
     """

@@ -12,13 +12,11 @@ instead of fire-and-forget ``foreach``.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-from ..functions.scalar import DIRECTORY_FILTERS
 
 NOMEDIA = ".nomedia"
 
@@ -29,20 +27,6 @@ MARKER_RESULT_SCHEMA = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-
-def filtered_dirs(spark: SparkSession, roots: Iterable[str]) -> DataFrame:
-    """Directories under ``roots`` whose NAME is in the filter set —
-    the prune points the lister refuses to descend into (:993-1014).
-    Walks stop at each match (the reference also never recurses into
-    filtered dirs)."""
-    found: list[tuple[str]] = []
-    for root in dict.fromkeys(roots):
-        for path_dir, sub_dirs, _ in os.walk(root, topdown=True):
-            hits = [d for d in sub_dirs if d in DIRECTORY_FILTERS]
-            found.extend((os.path.join(path_dir, d),) for d in hits)
-            sub_dirs[:] = [d for d in sub_dirs if d not in DIRECTORY_FILTERS]
-    return spark.createDataFrame(found, "dir_path string")
 
 
 def create_nomedia_markers(dirs: DataFrame) -> DataFrame:

@@ -11,20 +11,12 @@ the broken mmap membership scan (:427-452).
 
 from __future__ import annotations
 
-import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
-
-#: When a list, every AvailableNow drain below appends its wall seconds
-#: (tools/stream_phases.py sets this to split a streaming query's cost
-#: into STAGING — the temp-dir writes before the stream starts — vs
-#: DRAIN — the start→awaitTermination micro-batch run;
-#: staging = query-build wall − Σ drains).  None (the default) records
-#: nothing: two perf_counter calls per drain, no behavior change.
-DRAIN_SINK: list[float] | None = None
 
 
 def file_stream(
@@ -46,6 +38,19 @@ def file_stream(
     return reader.load(path)
 
 
+def _drain(writer: DataStreamWriter, timeout_s: int) -> None:
+    """Start ``writer`` as an AvailableNow query and wait for it to
+    drain.  A query still running after ``timeout_s`` is stopped and
+    ``TimeoutError`` raised, so a caller never reads a half-filled sink
+    and no query outlives the call."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not drain in {timeout_s} s"
+        )
+
+
 def run_available_now(
     result: DataFrame,
     checkpoint: str,
@@ -56,18 +61,13 @@ def run_available_now(
     the rows THIS run emitted.  The memory sink is test/debug plumbing —
     production sinks are parquet/Delta via the same writeStream."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    t0 = time.perf_counter()
-    q = (
+    _drain(
         result.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if DRAIN_SINK is not None:
-        DRAIN_SINK.append(time.perf_counter() - t0)
     return result.sparkSession.table(name)
 
 
@@ -82,20 +82,14 @@ def run_available_now_to_parquet(
     supports checkpoint recovery, so successive calls with the same
     checkpoint continue exactly where the previous run stopped — the
     production-shaped update lifecycle."""
-    spark = result.sparkSession
-    t0 = time.perf_counter()
-    q = (
+    _drain(
         result.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if DRAIN_SINK is not None:
-        DRAIN_SINK.append(time.perf_counter() - t0)
-    return spark.read.parquet(out_dir)
+    return result.sparkSession.read.parquet(out_dir)
 
 
 def run_foreach_batch(
@@ -108,14 +102,9 @@ def run_foreach_batch(
     """AvailableNow drain through a ``foreachBatch`` callback — the
     escape hatch for sinks Spark lacks natively (the reference's
     toast/notify side-channel, §2.10, maps here)."""
-    t0 = time.perf_counter()
-    q = (
+    _drain(
         result.writeStream.foreachBatch(batch_fn)
         .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint),
+        timeout_s,
     )
-    q.awaitTermination(timeout_s)
-    if DRAIN_SINK is not None:
-        DRAIN_SINK.append(time.perf_counter() - t0)
