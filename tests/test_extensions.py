@@ -248,6 +248,29 @@ def test_components_plan_stays_bounded_across_rounds(spark):
     assert len(plan_many) < 3 * max(len(plan_1round), 2_000)
 
 
+def test_components_converge_when_labels_settle_at_round_max_iter_minus_one(spark):
+    """Convergence is only checked every second round, so the loop must
+    still reach a check after labels settle at round ``max_iter - 1``
+    (a per-round check sees that fixpoint at round ``max_iter``).  A
+    path of n vertices settles at round n - 1; a path far longer than
+    ``max_iter`` still raises."""
+    import pytest
+
+    from video_metadata_db_spark.operators.components import connected_components
+
+    def path(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+
+    got = connected_components(path(4), max_iter=4).collect()
+    assert sorted((r["doc"], r["component"]) for r in got) == [(i, 0) for i in range(4)]
+    got = connected_components(path(20)).collect()
+    assert sorted((r["doc"], r["component"]) for r in got) == [(i, 0) for i in range(20)]
+    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
+        connected_components(path(40), max_iter=4)
+
+
 def test_ngram_df_cap_engages_and_preserves_pairs(spark):
     """The registered dedup_ngram_jaccard runs with max_df=NGRAM_MAX_DF
     (VERDICT r1 item 4: the cap existed but was dead).  Two pins:

@@ -257,6 +257,56 @@ def test_drain_timeout_stops_the_query_and_raises(spark, tmp_path, drain):
     assert spark.streams.active == []
 
 
+def test_memory_sink_drains_leave_no_view_behind(spark, tmp_path):
+    """Every memory-sink drain registers a temp view; run_available_now
+    must drop it before returning, or each drain's rows stay in driver
+    memory for the session's life.  Three drains leave the catalog as
+    it was, and each returned frame keeps exactly its own run's rows."""
+
+    def rows_of(frame):
+        return sorted((r["event_id"], r["event_type"], r["value"]) for r in frame.collect())
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    drained = []
+    for k in range(3):
+        src = str(tmp_path / f"src{k}")
+        rows = [(i, _t(10, i % 60), f"run{k}", float(i)) for i in range(10 * (k + 1))]
+        _write_batch(spark, src, rows)
+        got = run_available_now(file_stream(spark, src, EVENT_SCHEMA), str(tmp_path / f"cp{k}"))
+        want = sorted((r[0], r[2], r[3]) for r in rows)
+        assert rows_of(got) == want
+        assert sorted(t.name for t in spark.catalog.listTables()) == before
+        drained.append((got, want))
+    for got, want in drained:
+        assert rows_of(got) == want
+
+
+def test_stream_sentinel_is_newer_than_every_real_file(tmp_path):
+    """The file source hands files over oldest first, so a sentinel
+    that must arrive in the last micro-batch needs a later mtime than
+    every real file, even one stamped 60 s in the future."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from video_metadata_db_spark.plans.streaming_queries import (
+        _SENTINEL_TS,
+        _stage_sentinel,
+    )
+
+    real = tmp_path / "part-00000.parquet"
+    pq.write_table(pa.table({"event_id": pa.array([1], pa.int64())}), real)
+    future = time.time() + 60
+    os.utime(real, (future, future))
+    schema = StructType(
+        [StructField("event_id", LongType()), StructField("ts", TimestampType())]
+    )
+    _stage_sentinel(str(tmp_path), schema, [(-1, _SENTINEL_TS)])
+    assert os.path.getmtime(tmp_path / "sentinel.parquet") > os.path.getmtime(real)
+
+
 def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
     """The cluster-scale state backend: RocksDB spills dedup state to
     local disk, so state size is bounded by storage, not executor heap

@@ -5,16 +5,41 @@ Round 2 regression class: the driver regenerated events.parquet with
 TIMESTAMP(NANOS), and the loader's fixed int64-nanos conversion then
 broke every events query.  load_table must adapt to whichever flavor
 the footer declares and always emit TimestampType micros.
+
+load_table builds each schema from the parquet footer instead of
+letting Spark infer it, so a load launches no Spark job; that schema
+must be exactly the one inference gives.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from video_metadata_db_spark.sources.tables import load_table
+from video_metadata_db_spark.sources.tables import (
+    TABLES,
+    _footer_schema,
+    _normalize_events,
+    load_table,
+    register_views,
+)
+
+from .conftest import SF_SMOKE
+
+#: the three corpus scales, siblings of the smoke corpus
+SF_DIRS = tuple(f"{os.path.dirname(SF_SMOKE)}/sf{sf}" for sf in ("0.001", "0.01", "0.1"))
+
+#: events.ts flavors the corpus has shipped (or may ship) with
+TS_FLAVORS = {
+    "micros": (pa.timestamp("us"), False),
+    "nanos": (pa.timestamp("ns"), False),
+    "micros_tz": (pa.timestamp("us", tz="UTC"), False),
+    "int96": (pa.timestamp("us"), True),
+}
 
 _ROWS = [
     (1, dt.datetime(2024, 3, 1, 12, 0, 0, 123456), 7, "view", 1.5, "{}"),
@@ -22,7 +47,7 @@ _ROWS = [
 ]
 
 
-def _write_events(tmp, ts_type, ts_vals):
+def _write_events(tmp, ts_type, ts_vals, int96=False):
     table = pa.table(
         {
             "event_id": pa.array([r[0] for r in _ROWS], pa.int64()),
@@ -33,7 +58,31 @@ def _write_events(tmp, ts_type, ts_vals):
             "props": pa.array([r[5] for r in _ROWS], pa.string()),
         }
     )
-    pq.write_table(table, f"{tmp}/events.parquet", store_schema=False)
+    pq.write_table(
+        table,
+        f"{tmp}/events.parquet",
+        store_schema=False,
+        use_deprecated_int96_timestamps=int96,
+    )
+
+
+def _ts_vals(ts_type):
+    if ts_type.tz is None:
+        return [r[1] for r in _ROWS]
+    return [r[1].replace(tzinfo=dt.timezone.utc) for r in _ROWS]
+
+
+def _assert_matches_inference(spark, sf_dir, name):
+    """The footer schema is exactly what Spark's own inference gives
+    (with the nanos flag the loader sets), before and after the events
+    normalisation."""
+    path = f"{sf_dir}/{name}.parquet"
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    inferred = spark.read.parquet(path)
+    assert _footer_schema(path) == inferred.schema
+    if name == "events":
+        inferred = _normalize_events(inferred)
+    assert load_table(spark, sf_dir, name).schema == inferred.schema
 
 
 def _check(spark, tmp):
@@ -59,3 +108,46 @@ def test_events_ts_micros_tz(spark, tmp_path):
     vals = [r[1].replace(tzinfo=dt.timezone.utc) for r in _ROWS]
     _write_events(tmp_path, pa.timestamp("us", tz="UTC"), vals)
     _check(spark, tmp_path)
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)
+@pytest.mark.parametrize("name", TABLES)
+def test_footer_schema_matches_inference(spark, sf_dir, name):
+    _assert_matches_inference(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize("flavor", sorted(TS_FLAVORS))
+def test_events_footer_schema_matches_inference(spark, tmp_path, flavor):
+    """Every flavor, INT96 included (Spark's default encoding, which
+    pyarrow reports as nanos), gets the inferred schema and reads back
+    as TimestampType micros."""
+    ts_type, int96 = TS_FLAVORS[flavor]
+    _write_events(tmp_path, ts_type, _ts_vals(ts_type), int96=int96)
+    _assert_matches_inference(spark, str(tmp_path), "events")
+    _check(spark, tmp_path)
+
+
+def test_spark_written_table_directory_matches_inference(spark, tmp_path):
+    """A table Spark wrote itself is a directory of part files with
+    ``ts`` stored as INT96 (Spark's default); the loader reads the
+    first part's footer and still matches inference."""
+    load_table(spark, SF_DIRS[0], "events").repartition(3).write.parquet(
+        f"{tmp_path}/events.parquet"
+    )
+    _assert_matches_inference(spark, str(tmp_path), "events")
+
+
+def test_table_loads_launch_no_spark_job(spark, sf_dir):
+    """Schema inference costs one Spark job per parquet read, and
+    register_views loads every table for each SQL query; a load whose
+    schema comes from the footer launches none."""
+    sc = spark.sparkContext
+    group = "test_table_loads_launch_no_spark_job"
+    sc.setJobGroup(group, "corpus table loads")
+    try:
+        for name in TABLES:
+            load_table(spark, sf_dir, name)
+        register_views(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

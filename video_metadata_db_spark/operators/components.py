@@ -108,8 +108,10 @@ def connected_components(
     # coarsens to double-round boundaries: Σcomp is monotone
     # non-increasing per round, so equality across a double round still
     # certifies the fixpoint; the overshoot is ≤1 no-op round on the
-    # converged (tiny) label frame.
-    for _ in range(max(1, (max_iter + 1) // 2)):
+    # converged (tiny) label frame.  The extra double round lets labels
+    # that settle at round max_iter - 1 (which a per-round check sees
+    # at round max_iter) reach a boundary where equality shows.
+    for _ in range((max_iter + 1) // 2 + 1):
         new_labels, new_sum = cut_with_sum(one_round(one_round(labels)))
         labels = new_labels
         if new_sum == prev_sum:

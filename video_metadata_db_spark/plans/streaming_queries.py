@@ -43,11 +43,12 @@ def _stage_sentinel(path: str, schema: StructType, rows: list[tuple]) -> None:
     ``spark.createDataFrame(...).repartition(1).write`` costs a full
     Spark job (~0.3-0.5 s of pure scheduling per streaming query —
     measured in the r12 staging/drain phase split).  A driver-side
-    pyarrow write is the same bytes with zero jobs.  Written AFTER the
-    reals' write job returns, so its modification time is strictly
-    later and the file source's oldest-first ordering
-    (maxFilesPerTrigger=1) still delivers it in its own trailing
-    batch.  Timestamps are written as tz-aware UTC
+    pyarrow write is the same bytes with zero jobs.  Its modification
+    time is then set 2 s past the newest parquet file under ``path``
+    (write order alone does not guarantee that: a clock step or a real
+    file with a future mtime reorders them), so the file source's
+    oldest-first ordering (maxFilesPerTrigger=1) delivers it in its own
+    trailing batch.  Timestamps are written as tz-aware UTC
     micros (isAdjustedToUTC=true), which Spark's parquet reader maps to
     TimestampType exactly like its own INT96/INT64 output.
     """
@@ -83,7 +84,15 @@ def _stage_sentinel(path: str, schema: StructType, rows: list[tuple]) -> None:
         ],
         names=[f.name for f in cols],
     )
-    _pq.write_table(table, f"{path}/sentinel.parquet")
+    sentinel = f"{path}/sentinel.parquet"
+    _pq.write_table(table, sentinel)
+    newest = max(
+        _os.path.getmtime(_os.path.join(d, f))
+        for d, _, files in _os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+    _os.utime(sentinel, (newest + 2, newest + 2))
 
 
 @query(

@@ -4,14 +4,32 @@ One parquet file per table under ``{sf_dir}/{name}.parquet``.  Parquet is
 the engine's native format: columnar, predicate-pushdown- and
 column-pruning-friendly — ``df.explain`` on any downstream query should
 show ``PushedFilters`` / a narrowed ``ReadSchema``.
+
+A load launches no Spark job: the schema comes from the file's parquet
+footer, read on the driver through pyarrow, and is handed to the reader
+explicitly.  Left to itself, ``spark.read.parquet`` runs one job per
+call just to infer that same schema, and ``register_views`` loads all
+ten tables for every SQL query.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 TABLES = (
     "region",
@@ -29,34 +47,87 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _spark_type(t: pa.DataType, int96: bool) -> DataType:
+    """The type Spark's parquet schema inference gives a top-level
+    column of Arrow type ``t``: timestamps without a zone are
+    TIMESTAMP_NTZ, TIMESTAMP(NANOS) is its raw int64 (the
+    ``nanosAsLong`` flag), and INT96 — Spark's own default timestamp
+    encoding, which pyarrow also reports as nanos — is a plain
+    timestamp."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if int96:
+        return TimestampType()
+    if pa.types.is_timestamp(t) and t.unit == "ns":
+        return LongType()
+    return from_arrow_type(t, prefer_timestamp_ntz=True)
+
+
+def _footer_schema(path: str) -> StructType:
+    """The schema Spark would infer for ``path``, built from a parquet
+    footer on the driver, so the read that uses it launches no job.
+    ``path`` is one parquet file or, as Spark writes a table, a
+    directory of part files; like Spark, take the first data file's
+    footer (pyarrow resolves local paths and URIs alike, and skips
+    ``_``/``.`` files).  Every field is nullable, as in Spark's own
+    inference.
+
+    pyarrow (and pandas, under ``from_arrow_type``) is imported here,
+    not at module level: the CLI imports this package but reads no
+    corpus table, and the two add about 70 MB to its driver process."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    dataset = ds.dataset(path, format="parquet")
+    if not dataset.files:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    parquet_schema = pq.read_metadata(dataset.files[0], filesystem=dataset.filesystem).schema
+    int96 = {
+        parquet_schema.column(i).path
+        for i in range(len(parquet_schema))
+        if parquet_schema.column(i).physical_type == "INT96"
+    }
+    return StructType(
+        [
+            StructField(f.name, _spark_type(f.type, f.name in int96), True)
+            for f in parquet_schema.to_arrow_schema()
+        ]
+    )
+
+
+def _normalize_events(raw: DataFrame) -> DataFrame:
+    """events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
+    Spark's vectorized reader rejects — read as raw int64 nanos via the
+    legacy flag and truncate to micros, matching DuckDB/Arrow) and plain
+    TIMESTAMP(MICROS), with or without a zone.  Adapt to whichever the
+    footer says so regenerated corpora don't break every events query:
+    ``ts`` is always TimestampType micros."""
+    ts_type = raw.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        # integer `div`, not `/`: epoch-2024 nanos (~1.7e18) exceed a
+        # double's 53-bit mantissa, so float division truncates wrong
+        # by up to 1 µs — caught by the session-window oracle on min(ts)
+        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(ts_type, TimestampNTZType):
+        # normalize to TimestampType so unix_micros/window/watermark
+        # operators downstream see one type; session tz is UTC
+        # (session.py:40), so the wall-clock value is unchanged
+        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one corpus table. Schema comes from the parquet footer —
-    never ``inferSchema`` over text."""
+    """Read one corpus table with the schema its parquet footer declares
+    — never ``inferSchema`` over text, and no schema-inference job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; corpus tables: {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-        # Spark's vectorized reader rejects — read as raw int64 nanos via
-        # the legacy flag and truncate to micros, matching DuckDB/Arrow)
-        # and plain TIMESTAMP(MICROS). Adapt to whichever the footer says
-        # so regenerated corpora don't break every events query.
+        # lets the reader take TIMESTAMP(NANOS) as int64 (_normalize_events)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-        if ts_type == "bigint":
-            # integer `div`, not `/`: epoch-2024 nanos (~1.7e18) exceed a
-            # double's 53-bit mantissa, so float division truncates wrong
-            # by up to 1 µs — caught by the session-window oracle on min(ts)
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type.startswith("timestamp_ntz"):
-            # normalize to TimestampType so unix_micros/window/watermark
-            # operators downstream see one type; session tz is UTC
-            # (session.py:40), so the wall-clock value is unchanged
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        )
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    raw = spark.read.schema(_footer_schema(path)).parquet(path)
+    return _normalize_events(raw) if name == "events" else raw
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -59,8 +59,14 @@ def run_available_now(
 ) -> DataFrame:
     """Drain everything currently available into a memory sink; return
     the rows THIS run emitted.  The memory sink is test/debug plumbing —
-    production sinks are parquet/Delta via the same writeStream."""
+    production sinks are parquet/Delta via the same writeStream.
+
+    The sink registers itself as temp view ``name``.  The returned frame
+    is resolved against the sink before that view is dropped, so it
+    holds the sink's rows by reference and the session's catalog keeps
+    nothing once the caller lets go of the frame."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
+    spark = result.sparkSession
     _drain(
         result.writeStream.format("memory")
         .queryName(name)
@@ -68,7 +74,9 @@ def run_available_now(
         .option("checkpointLocation", checkpoint),
         timeout_s,
     )
-    return result.sparkSession.table(name)
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
 
 
 def run_available_now_to_parquet(
