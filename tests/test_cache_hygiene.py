@@ -8,12 +8,16 @@ operators bound the leak with a small LRU scope: a semantically
 identical input reuses the live cache (repeated dedup over one corpus
 pays the signature pass once), distinct inputs rotate through at most
 ``_MAX_SCOPED`` frames, and ``release_dedup_caches`` clears the tail.
-These tests pin all three behaviors, plus that k-means (which
-unpersists in-function) leaves nothing behind.
+These tests pin all three behaviors, that evicting a frame whose cache
+was never built warns, and that k-means (which unpersists in-function)
+leaves nothing behind.
 """
 
 from __future__ import annotations
 
+import warnings
+
+import pytest
 from pyspark.sql import functions as F
 
 from video_metadata_db_spark.operators import dedup as D
@@ -54,9 +58,7 @@ def test_dedup_cache_scope_is_bounded_and_releasable(spark):
     assert len(D._SCOPED_CACHES) == 5
 
     # distinct frames beyond the bound evict the oldest: the scope
-    # never exceeds _MAX_SCOPED (6 since r11 — the prefix-jaccard path
-    # persists two frames per corpus) however many dedup calls a
-    # session makes
+    # never exceeds _MAX_SCOPED however many dedup calls a session makes
     for mod in (3, 4, 5):
         D.minhash_lsh_dedup(
             docs.filter(F.col("doc_id") % mod == 0), threshold=0.5
@@ -67,6 +69,32 @@ def test_dedup_cache_scope_is_bounded_and_releasable(spark):
     assert not D._SCOPED_CACHES
     # nothing the dedup calls persisted remains in the executor store
     assert persistent_rdd_ids(spark) <= base
+
+
+def _distinct_frames(spark, n):
+    return [spark.range(8).select((F.col("id") + i).alias("v")) for i in range(n)]
+
+
+def test_scope_eviction_of_an_unbuilt_cache_warns(spark):
+    """One frame past the bound evicts the oldest; none was ever acted
+    on, so its consumer would recompute it — that eviction warns once."""
+    D.release_dedup_caches()
+    with pytest.warns(RuntimeWarning, match="never built") as record:
+        for df in _distinct_frames(spark, D._MAX_SCOPED + 1):
+            D._scoped_persist(df)
+    assert len([w for w in record if w.category is RuntimeWarning]) == 1
+    assert len(D._SCOPED_CACHES) == D._MAX_SCOPED
+    D.release_dedup_caches()
+
+
+def test_scope_eviction_of_consumed_frames_is_silent(spark):
+    D.release_dedup_caches()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        for df in _distinct_frames(spark, D._MAX_SCOPED + 2):
+            D._scoped_persist(df).agg(F.sum("v")).collect()
+    assert len(D._SCOPED_CACHES) == D._MAX_SCOPED
+    D.release_dedup_caches()
 
 
 def test_released_dedup_result_still_correct(spark):

@@ -122,27 +122,6 @@ def test_decode_image_is_gated():
         decode_image(b"\x89PNG fake")
 
 
-def test_resize_images_plumbing(spark):
-    """Resize: image assets only, exact target byte count, idempotent
-    byte determinism."""
-    from video_metadata_db_spark.operators.multimodal import (
-        resize_images,
-        synthesize_assets,
-    )
-    from video_metadata_db_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    assets = synthesize_assets(docs)
-    out = resize_images(assets, w=8, h=8)
-    rows = out.collect()
-    n_images = assets.filter(F.col("kind") == "image").count()
-    assert len(rows) == n_images > 0
-    assert all(r["n_bytes"] == 64 and len(r["payload"]) == 64 for r in rows)
-    assert all(r["error"] is None for r in rows)
-    again = {r["asset_id"]: bytes(r["payload"]) for r in out.collect()}
-    assert {r["asset_id"]: bytes(r["payload"]) for r in rows} == again
-
-
 def test_sample_frames_shape(spark):
     """Frame sampling: N rows per video, reassembling frames == payload."""
     from video_metadata_db_spark.operators.multimodal import (
@@ -163,23 +142,34 @@ def test_sample_frames_shape(spark):
 
 
 def test_star_components_match_label_propagation(spark):
-    """Large-star/small-star == label propagation on random graphs, and
-    converges in O(log n) rounds on a 64-deep chain (where label
-    propagation would need 64)."""
+    """Large-star/small-star gives every vertex the min id of its
+    component — the label-propagation fixpoint, computed here by a
+    plain-Python union-find — on a random graph, and converges in
+    O(log n) rounds on a 64-deep chain (where label propagation would
+    need 64)."""
     import random
 
-    from video_metadata_db_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from video_metadata_db_spark.operators.components import connected_components_star
 
     rng = random.Random(7)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
     edges = [(a, b) for a, b in edges if a != b]
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(v, find(v)) for v in list(parent)}
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    lp = {(r["doc"], r["component"]) for r in connected_components(df).collect()}
     st = {(r["doc"], r["component"]) for r in connected_components_star(df).collect()}
-    assert lp == st
+    assert st == want
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
@@ -191,84 +181,46 @@ def test_star_components_match_label_propagation(spark):
 def test_components_reliable_checkpoint_mode(spark, tmp_path):
     """checkpoint_mode='reliable' (cluster-safe: survives executor
     loss) produces identical labels via sc.setCheckpointDir storage
-    for BOTH variants — label propagation and large-star/small-star
     (the star loop cuts lineage every round, so its reliable path runs
-    many real checkpoints on a multi-round chain) — and an unknown
-    mode fails fast."""
+    many real checkpoints on a multi-round chain), and an unknown mode
+    fails fast."""
     import pytest
 
-    from video_metadata_db_spark.operators.components import (
-        connected_components,
-        connected_components_star,
-    )
+    from video_metadata_db_spark.operators.components import connected_components_star
 
-    df = spark.createDataFrame(
-        [(0, 1), (1, 2), (5, 6), (8, 8)], "doc_a long, doc_b long"
-    )
     # 40-deep chain: several star contraction rounds, each checkpointed
     chain = [(i, i + 1) for i in range(40)]
     chain_df = spark.createDataFrame(chain, "doc_a long, doc_b long")
 
-    local = {(r["doc"], r["component"]) for r in connected_components(df).collect()}
     star_local = {
         (r["doc"], r["component"]) for r in connected_components_star(chain_df).collect()
     }
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    reliable = {
-        (r["doc"], r["component"])
-        for r in connected_components(df, checkpoint_mode="reliable").collect()
-    }
     star_reliable = {
         (r["doc"], r["component"])
         for r in connected_components_star(chain_df, checkpoint_mode="reliable").collect()
     }
-    assert local == reliable
     assert star_local == star_reliable
     assert star_reliable == {(i, 0) for i in range(41)}
     with pytest.raises(ValueError, match="checkpoint_mode"):
-        connected_components(df, checkpoint_mode="bogus").collect()
-    with pytest.raises(ValueError, match="checkpoint_mode"):
-        connected_components_star(df, checkpoint_mode="bogus").collect()
+        connected_components_star(chain_df, checkpoint_mode="bogus").collect()
 
 
 def test_components_plan_stays_bounded_across_rounds(spark):
     """The per-round lineage cut must keep the FINAL plan size flat —
     without it the plan string grows with every iteration (the classic
     iterative-Spark trap) and a 100 TB run dies in the optimizer.  A
-    64-chain forces many label-propagation rounds; the result's plan
-    must stay within a small constant of the 1-round plan."""
-    from video_metadata_db_spark.operators.components import connected_components
+    64-chain forces several star rounds; the result's plan must stay
+    within a small constant of the 1-round plan."""
+    from video_metadata_db_spark.operators.components import connected_components_star
 
     tiny = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
     )
-    plan_1round = connected_components(tiny)._jdf.queryExecution().toString()
-    plan_many = connected_components(chain, max_iter=80)._jdf.queryExecution().toString()
+    plan_1round = connected_components_star(tiny)._jdf.queryExecution().toString()
+    plan_many = connected_components_star(chain)._jdf.queryExecution().toString()
     assert len(plan_many) < 3 * max(len(plan_1round), 2_000)
-
-
-def test_components_converge_when_labels_settle_at_round_max_iter_minus_one(spark):
-    """Convergence is only checked every second round, so the loop must
-    still reach a check after labels settle at round ``max_iter - 1``
-    (a per-round check sees that fixpoint at round ``max_iter``).  A
-    path of n vertices settles at round n - 1; a path far longer than
-    ``max_iter`` still raises."""
-    import pytest
-
-    from video_metadata_db_spark.operators.components import connected_components
-
-    def path(n):
-        return spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-        )
-
-    got = connected_components(path(4), max_iter=4).collect()
-    assert sorted((r["doc"], r["component"]) for r in got) == [(i, 0) for i in range(4)]
-    got = connected_components(path(20)).collect()
-    assert sorted((r["doc"], r["component"]) for r in got) == [(i, 0) for i in range(20)]
-    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
-        connected_components(path(40), max_iter=4)
 
 
 def test_ngram_df_cap_engages_and_preserves_pairs(spark):

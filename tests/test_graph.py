@@ -221,18 +221,19 @@ def test_label_propagation_unreachable_stays_null(spark):
 
 def test_triangle_substrate_cache_scope_bounded(spark):
     """r12: the oriented edge frame persists (MEMORY_AND_DISK — lineage
-    kept, recompute on executor loss) instead of localCheckpoint; the
-    per-call persists must stay bounded by the FIFO scope and be
-    releasable, so a long mixed session cannot accumulate edge-sized
-    cache entries."""
+    kept, recompute on executor loss) instead of localCheckpoint.  It
+    joins the one bounded persist scope: every call adds its own entry
+    (no cross-call reuse), and ``release_dedup_caches`` releases them,
+    so a long mixed session cannot accumulate edge-sized cache entries."""
+    from video_metadata_db_spark.operators import dedup as D
     from video_metadata_db_spark.operators import graph as g
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "s1 long, s2 long"
     )
-    g.release_graph_caches()
+    D.release_dedup_caches()
     for _ in range(3):
         g.triangle_counts(e).collect()
-    assert len(g._GRAPH_CACHES) <= g._MAX_GRAPH_CACHES
-    assert g.release_graph_caches() > 0
-    assert not g._GRAPH_CACHES
+    assert len(D._SCOPED_CACHES) == 3
+    assert D.release_dedup_caches() == 3
+    assert not D._SCOPED_CACHES

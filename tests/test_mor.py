@@ -1,6 +1,5 @@
 """Round-trip tests for the MERGE / merge-on-read surface:
-relational merge semantics, copy-on-write rewrite, delete files, and
-the delete-beats-upsert overlay rule.  (The registry value oracles for
+relational merge semantics and the delete-beats-upsert overlay rule.  (The registry value oracles for
 merge_upsert_customers / mor_snapshot_read run in
 test_registry_queries.py.)
 """
@@ -11,11 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from video_metadata_db_spark.operators.mor import merge_upsert, snapshot_read
-from video_metadata_db_spark.sources.maintenance import (
-    merge_upsert_cow,
-    read_with_deletes,
-    write_delete_keys,
-)
 
 
 def _base(spark):
@@ -75,32 +69,6 @@ def test_merge_upsert_rejects_missing_payload(spark):
     bad = spark.createDataFrame([(2, "B")], "id long, name string")
     with pytest.raises(ValueError, match="missing payload"):
         merge_upsert(_base(spark), bad, ["id"])
-
-
-def test_merge_upsert_cow_roundtrip(spark, tmp_path):
-    src = str(tmp_path / "t")
-    out = str(tmp_path / "t_v2")
-    _base(spark).write.parquet(src)
-    got = {
-        r["id"]: (r["name"], r["v"])
-        for r in merge_upsert_cow(spark, src, out, _updates(spark), ["id"]).collect()
-    }
-    assert got == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30), 9: ("z", 900)}
-    # the source snapshot is untouched (copy-on-write, not in-place)
-    assert spark.read.parquet(src).count() == 3
-
-
-def test_delete_files_accumulate_and_apply(spark, tmp_path):
-    tdir = str(tmp_path / "t")
-    _base(spark).write.parquet(tdir)
-    # no delete dir yet → read passes through
-    assert read_with_deletes(spark, tdir, ["id"]).count() == 3
-    write_delete_keys(tdir, spark.createDataFrame([(1,)], "id long"))
-    write_delete_keys(tdir, spark.createDataFrame([(3,)], "id long"))
-    got = read_with_deletes(spark, tdir, ["id"]).collect()
-    assert [r["id"] for r in got] == [2]
-    # the plain reader must NOT see _deletes as data (underscore dir)
-    assert spark.read.parquet(tdir).count() == 3
 
 
 def test_snapshot_read_delete_beats_upsert(spark):

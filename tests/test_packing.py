@@ -72,69 +72,3 @@ def test_pack_blocks_invariants(spark):
         assert r["last_block"] == (r["start_offset"] + r["n_tokens"] - 1) // 512
         assert r["n_blocks"] == r["last_block"] - r["first_block"] + 1
 
-
-def test_training_shard_export_roundtrip(spark, tmp_path):
-    """Shard export contract: membership = position // rows_per_shard
-    with dense non-overlapping position ranges, within-shard files
-    hold the rows the manifest claims, the token accounting sums to
-    the corpus total, and a re-export is byte-identical (deterministic
-    seeded order)."""
-    from video_metadata_db_spark.functions.text import token_count
-    from video_metadata_db_spark.sources.export import (
-        read_training_shards,
-        write_training_shards,
-    )
-
-    docs = (
-        load_table(spark, SF, "documents")
-        .select(
-            "doc_id",
-            F.md5(F.concat(F.lit("ep1:"), F.col("doc_id").cast("string"))).alias(
-                "shuffle_key"
-            ),
-            token_count(F.col("text")).alias("n_tokens"),
-        )
-        .withColumn(
-            "_hashnum",
-            F.conv(F.substring("shuffle_key", 1, 15), 16, 10).cast("long"),
-        )
-    )
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(
-        docs, out, rows_per_shard=16, order_col="_hashnum",
-        tiebreak_col="doc_id", token_col="n_tokens",
-    ).collect()
-
-    n = docs.count()
-    rows = {r["shard"]: r for r in manifest}
-    n_shards = (n + 15) // 16
-    assert set(rows) == set(range(n_shards))
-    for s, r in rows.items():
-        assert r["first_position"] == s * 16
-        assert r["last_position"] == min((s + 1) * 16, n) - 1
-        assert r["n_rows"] == r["last_position"] - r["first_position"] + 1
-    assert sum(r["n_tokens"] for r in rows.values()) == (
-        docs.agg(F.sum("n_tokens")).first()[0]
-    )
-
-    data, mf = read_training_shards(spark, out)
-    assert data.count() == n
-    # per-shard pruned read matches the manifest and the global order
-    got = data.filter(F.col("shard") == 1).orderBy("position").collect()
-    assert [r["position"] for r in got] == list(range(16, 32))
-    # global order is the seeded-hash order
-    in_order = data.orderBy("position").select("_hashnum").collect()
-    assert [r["_hashnum"] for r in in_order] == sorted(
-        r["_hashnum"] for r in in_order
-    )
-
-    # determinism: re-export reproduces identical membership
-    out2 = str(tmp_path / "shards2")
-    write_training_shards(
-        docs, out2, rows_per_shard=16, order_col="_hashnum",
-        tiebreak_col="doc_id", token_col="n_tokens",
-    )
-    d2, _ = read_training_shards(spark, out2)
-    a = {(r["doc_id"], r["shard"], r["position"]) for r in data.collect()}
-    b = {(r["doc_id"], r["shard"], r["position"]) for r in d2.collect()}
-    assert a == b

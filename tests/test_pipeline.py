@@ -218,19 +218,14 @@ def test_tsv_read_tolerates_malformed_rows(spark, tmp_path):
 
 
 def test_merge_with_schema_evolution(spark, built):
-    """Merging an old-schema db (missing a newer column) NULL-fills it
-    under allow_missing_columns; strict mode still raises."""
+    """Merging an old-schema db (missing a newer column) raises instead
+    of silently NULL-filling it."""
     import pytest
 
     records, _ = built
     old_db = records.drop("sub_en_hi_size")  # "older engine version"
     with pytest.raises(Exception):
         merge_metadata_dbs([records, old_db], sort_cols=[])
-    merged = merge_metadata_dbs(
-        [records, old_db], sort_cols=[], allow_missing_columns=True
-    )
-    assert merged.count() == 2 * records.count()
-    assert merged.filter(F.col("sub_en_hi_size").isNull()).count() >= records.count()
 
 
 def test_corrupt_json_ingest_dead_letters(spark, tmp_path):

@@ -8,11 +8,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from video_metadata_db_spark.operators.skew import (
-    salted_join,
-    top_frequency_keys,
-    two_stage_distinct_count,
-)
+from video_metadata_db_spark.operators.skew import salted_join, two_stage_distinct_count
 
 
 def _skewed(spark):
@@ -53,12 +49,6 @@ def test_two_stage_distinct_count(spark):
         for r in df.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()
     }
     assert got == want
-
-
-def test_top_frequency_keys(spark):
-    top = top_frequency_keys(_skewed(spark), "k", k=1).collect()
-    assert top[0]["k"] == "HOT"
-    assert top[0]["share"] == 0.9
 
 
 def _partition_sizes(df, n_parts, *cols):

@@ -339,54 +339,6 @@ def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
         spark.conf.set(key, before)
 
 
-def test_transform_with_state_api(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4's arbitrary-state API) —
-    same running-totals contract as the applyInPandasWithState path,
-    verified against the batch aggregate.  SKIPS where protobuf is
-    broken (the TWS runner's state server requires it); the module
-    docstring records the constraint."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason=(
-            "transformWithState runner needs protobuf; this container "
-            "ships none at all — `import google.protobuf` raises "
-            "ModuleNotFoundError: No module named 'google' "
-            "(re-probed r9, 2026-08-16; pip install is out of contract)"
-        ),
-    )
-    from video_metadata_db_spark.sources.tables import load_table
-    from video_metadata_db_spark.streaming.runner import file_stream, run_available_now
-    from video_metadata_db_spark.streaming.stateful import running_user_totals_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key)
-    try:
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        events = load_table(spark, "/root/testdata/sf0.001", "events")
-        src = str(tmp_path / "src")
-        events.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = file_stream(spark, src, events.schema)
-        sink = run_available_now(
-            running_user_totals_tws(stream), str(tmp_path / "cp"), output_mode="update"
-        )
-        got = {
-            (r["user_id"], r["n_events"], round(r["total_value"], 6))
-            for r in sink.collect()
-        }
-        exp = {
-            (r["user_id"], r["n"], round(r["t"], 6))
-            for r in events.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-            .collect()
-        }
-        assert got == exp
-    finally:
-        spark.conf.set(key, before)
-
-
 def test_materialized_totals_accumulate_across_batches(spark, tmp_path):
     """Incremental materialized view: per-user totals upserted via
     foreachBatch with versioned snapshot commits — after two

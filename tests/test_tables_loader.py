@@ -137,6 +137,51 @@ def test_spark_written_table_directory_matches_inference(spark, tmp_path):
     _assert_matches_inference(spark, str(tmp_path), "events")
 
 
+#: Arrow column types whose Spark type is not ``from_arrow_type``'s:
+#: inference widens unsigned ints, reads a duration or a nested nanos
+#: timestamp as its int64 storage, types an all-null column int, and
+#: makes every nested field nullable
+FOOTER_TYPES = {
+    "uint8": pa.uint8(),
+    "uint16": pa.uint16(),
+    "uint32": pa.uint32(),
+    "uint64": pa.uint64(),
+    "duration": pa.duration("us"),
+    "null": pa.null(),
+    "dictionary_uint16": pa.dictionary(pa.int8(), pa.uint16()),
+    "list_timestamp_ns": pa.list_(pa.timestamp("ns")),
+    "list_uint8": pa.list_(pa.uint8()),
+    "list_required": pa.list_(pa.field("x", pa.int64(), nullable=False)),
+    "struct_timestamp_ns": pa.struct([("t", pa.timestamp("ns"))]),
+    "struct_required_uint32": pa.struct([pa.field("u", pa.uint32(), nullable=False)]),
+    "map_timestamp_ns": pa.map_(pa.string(), pa.timestamp("ns")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FOOTER_TYPES))
+def test_footer_schema_matches_inference_for_remapped_types(spark, tmp_path, name):
+    """A one-column file of each type gets the inferred schema, whether
+    or not pyarrow stored its Arrow schema in the footer."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for store in (True, False):
+        path = f"{tmp_path}/{name}_{store}.parquet"
+        table = pa.table({"c": pa.array([None], FOOTER_TYPES[name])})
+        pq.write_table(table, path, store_schema=store)
+        assert _footer_schema(path) == spark.read.parquet(path).schema
+
+
+def test_footer_schema_rejects_nested_int96(spark, tmp_path):
+    """Spark writes timestamps as INT96, which pyarrow reports as nanos;
+    nested in an array that cannot be told apart from TIMESTAMP(NANOS),
+    so the footer schema names the column and raises."""
+    path = f"{tmp_path}/t.parquet"
+    spark.sql("SELECT 1 AS id, array(TIMESTAMP'2024-03-01 12:00:00') AS stamps").write.parquet(
+        path
+    )
+    with pytest.raises(ValueError, match="'stamps'"):
+        _footer_schema(path)
+
+
 def test_table_loads_launch_no_spark_job(spark, sf_dir):
     """Schema inference costs one Spark job per parquet read, and
     register_views loads every table for each SQL query; a load whose

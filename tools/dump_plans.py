@@ -72,8 +72,8 @@ def main() -> None:
         "showed +20-30% on queries whose plans had not changed.",
         "",
         "Session-order dependence of the dedup family (VERDICT r11 'what's",
-        "wrong' #2, documented rather than hidden): the dedup operators share a",
-        "6-deep LRU of persisted signature/fingerprint/shingle frames",
+        "wrong' #2, documented rather than hidden): the operators share one",
+        "8-deep LRU of persisted signature/fingerprint/shingle/edge frames",
         "(`operators/dedup.py:_scoped_persist`).  The FIRST query to need a",
         "given frame pays its build inside its own timed region; later dedup",
         "queries over the same corpus reuse the live cache, so their per-query",
@@ -81,10 +81,10 @@ def main() -> None:
         "session.  The headline TOTAL is order-independent (the build is paid",
         "exactly once either way); only the attribution between dedup entries",
         "shifts.  `tests/test_cache_hygiene.py` bounds the cache scope;",
-        "`release_dedup_caches()` gives cache-free sessions.  The r12 triangle",
-        "substrate cache (`operators/graph.py:_GRAPH_CACHES`) deliberately does",
-        "NOT reuse across queries — per-call persists only — so graph entries",
-        "stay order-independent.",
+        "`release_dedup_caches()` gives cache-free sessions.  The triangle",
+        "substrate's edge frames share that scope but never reuse each other",
+        "(each call's degree table is a fresh localCheckpoint) — per-call",
+        "persists only — so graph entries stay order-independent.",
         "",
         "Round-5 triage of the three r3→r4 drifts (4 warm repeats each, quiet",
         "box): `explode_tokens` (warm 0.22-0.25 s ≈ r3) and `dedup_minhash_lsh`",

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.dedup import hash60, tokens_of
+from ..operators.dedup import tokens_of
 
 #: Minimal English stopword profile for the language-ID heuristic.
 EN_STOPWORDS = (
@@ -70,24 +70,3 @@ def quality_score(text: Column, toks: Column | None = None) -> Column:
     return (
         0.3 * len_score + 0.3 * alpha_ratio(text) + 0.2 * stopword_ratio(text, toks) + 0.2 * word_len_score
     )
-
-
-def char_ngram_hashes(text: Column, k: int = 8) -> Column:
-    """Array of 60-bit hashes of the k-char grams (fingerprint input)."""
-    n = F.length(text)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda p: hash60(F.substring(text, p, k)))
-
-
-def winnowing_fingerprints(text: Column, k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprints: distinct minima of each
-    w-window over the k-gram rolling hashes (Schleimer et al. — the
-    standard local fingerprinting scheme).
-
-    WARNING: column-expression form — CollapseProject inlines the hash
-    array into every window term, so cost is O(len²) hashes per doc.
-    Fine for short strings; for real documents use the posexplode +
-    window-min plan in ``plans.text_queries.q_fingerprint``."""
-    hs = char_ngram_hashes(text, k)
-    wins = F.sequence(F.lit(1), F.greatest(F.size(hs) - (w - 1), F.lit(1)))
-    return F.array_distinct(F.transform(wins, lambda p: F.array_min(F.slice(hs, p, w))))

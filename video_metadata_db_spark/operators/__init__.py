@@ -6,11 +6,7 @@ from .chunking import (
     sliding_grams,
 )
 from .clustering import cluster_profile, kmeans_assign, kmeans_assign_arrow
-from .components import (
-    components_incremental,
-    connected_components,
-    connected_components_star,
-)
+from .components import components_incremental, connected_components_star
 from .dedup import (
     band_buckets,
     exact_dedup,
@@ -28,14 +24,8 @@ from .dedup import (
 from .bpe import bpe_train, bpe_word_counts
 from .diff import apply_diff, corpus_diff, corpus_diff_patch
 from .membership import bloom_prefiltered_new_keys, build_bloom
-from .metrics import observe_dead_letter, observe_stage
 from .packing import global_row_number, pack_blocks, sequence_offsets
-from .multimodal import (
-    extract_features,
-    resize_images,
-    sample_frames,
-    synthesize_assets,
-)
+from .multimodal import extract_features, sample_frames, synthesize_assets
 from .parity import (
     merge_metadata_dbs,
     synthetic_part_filenames,
@@ -47,7 +37,7 @@ from .parity import (
 from .pipeline import build_metadata_records, filter_candidates, join_sidecars
 from .quantization import ivf_adc_topk, pq_adc_topk, pq_codebooks, pq_encode
 from .probe import probe_videos
-from .skew import salted_join, top_frequency_keys, two_stage_distinct_count
+from .skew import salted_join, two_stage_distinct_count
 
 __all__ = [
     "asof_join",
@@ -65,7 +55,6 @@ __all__ = [
     "corpus_diff_patch",
     "doc_containment_pairs",
     "components_incremental",
-    "connected_components",
     "connected_components_star",
     "exact_dedup",
     "kmeans_assign",
@@ -75,8 +64,6 @@ __all__ = [
     "global_row_number",
     "join_sidecars",
     "lsh_candidate_pairs",
-    "observe_dead_letter",
-    "observe_stage",
     "merge_metadata_dbs",
     "minhash_lsh_dedup",
     "minhash_signatures",
@@ -88,7 +75,6 @@ __all__ = [
     "pq_encode",
     "probe_videos",
     "release_dedup_caches",
-    "resize_images",
     "sample_frames",
     "sequence_offsets",
     "shingles_of",
@@ -101,7 +87,6 @@ __all__ = [
     "synthetic_part_filenames",
     "time_proximity_pairs",
     "tokens_of",
-    "top_frequency_keys",
     "two_stage_distinct_count",
     "update_new_files",
     "variant_report",

@@ -6,14 +6,14 @@ cluster so one canonical representative survives.  That is connected
 components, an inherently iterative computation (SURVEY.md §7 hard
 part 4: similarity/dedup at 100 TB).
 
-Algorithm: label propagation to the minimum reachable id.  Each round
-every vertex takes the min of its own label and its neighbors' labels;
-convergence in O(diameter) rounds — near-dup graphs are
-overwhelmingly tiny cliques (diameter ≤ 2-3), so 3-5 rounds settle
-real corpora.  The self-loop trick folds "keep my own label" into the
-neighbor aggregation, making each round exactly ONE join + ONE
-aggregation; lineage is cut per round so the plan doesn't grow across
-iterations (the classic iterative-Spark trap).
+Algorithm: large-star / small-star contraction
+(:func:`connected_components_star`) to the minimum reachable id —
+O(log n) rounds, where min-label propagation needs O(diameter), and
+near-dup chains grow with corpus size.  :func:`components_incremental`
+merges a batch of new edges into stored labels through the same
+contraction.  Each round is two joins + two aggregates; lineage is cut
+per round so the plan doesn't grow across iterations (the classic
+iterative-Spark trap).
 
 The lineage cut is configurable via ``checkpoint_mode``:
 ``"local"`` (default) uses ``localCheckpoint`` — executor-local
@@ -43,95 +43,6 @@ def _cut(df: DataFrame, mode: str) -> DataFrame:
     if mode == "local":
         return df.localCheckpoint(eager=True)
     raise ValueError(f"checkpoint_mode must be 'local' or 'reliable', got {mode!r}")
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    """(vertex, component) for every vertex in ``edges``; component =
-    min vertex id reachable through the pair graph.
-
-    Raises if ``max_iter`` rounds don't converge — at that point the
-    graph has a path longer than any plausible near-dup cluster and
-    needs :func:`connected_components_star` (O(log n) rounds) instead.
-    """
-    # materialize the edge list FIRST: the pair generators feeding this
-    # (minhash/simhash joins) are expensive, and the plan below consumes
-    # `edges` four times (both directions × {sym, vertices}) — without
-    # the cut the generator pipeline runs 4× before round one
-    e0 = _cut(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), checkpoint_mode
-    )
-    both = e0.unionByName(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    vertices = both.select(F.col("a").alias("v")).distinct()
-    # self-loops fold "min with my own label" into the neighbor min, so
-    # a round is join → groupBy, with no second join against labels
-    sym = _cut(
-        both.unionByName(
-            vertices.select(F.col("v").alias("a"), F.col("v").alias("b"))
-        ),
-        checkpoint_mode,
-    )
-    # labels only ever DECREASE, so Σcomp strictly decreases until the
-    # fixpoint — a one-aggregate convergence test instead of a
-    # new-vs-old join.  The aggregate rides the checkpoint
-    # materialization itself via ``observe`` (CollectMetrics merges
-    # per-task partials during the SAME job that writes the cut), so
-    # every round is exactly ONE job — no second pass, even a cheap
-    # one, over the labels.
-    def cut_with_sum(frame: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        cut = _cut(frame.observe(obs, F.sum("comp").alias("s")), checkpoint_mode)
-        return cut, obs.get["s"]
-
-    def one_round(labels: DataFrame) -> DataFrame:
-        # no broadcast hints: labels can be billions of rows at corpus
-        # scale — AQE turns these into broadcast joins at runtime
-        # whenever the side is actually small
-        return (
-            sym.join(labels, sym["a"] == labels["v"])
-            .groupBy(F.col("b").alias("v"))
-            .agg(F.min("comp").alias("comp"))
-        )
-
-    labels, prev_sum = cut_with_sum(vertices.withColumn("comp", F.col("v")))
-    # TWO propagation rounds per lineage cut (r12, guide §2.4): the cut
-    # job is the per-round synchronization barrier — halving the cut
-    # count halves the checkpoint materializations and driver
-    # round-trips.  Each round's subtree is consumed exactly once by
-    # the next round's join, so lineage depth between cuts stays
-    # bounded at two join+aggregate pairs.  Convergence detection
-    # coarsens to double-round boundaries: Σcomp is monotone
-    # non-increasing per round, so equality across a double round still
-    # certifies the fixpoint; the overshoot is ≤1 no-op round on the
-    # converged (tiny) label frame.  The extra double round lets labels
-    # that settle at round max_iter - 1 (which a per-round check sees
-    # at round max_iter) reach a boundary where equality shows.
-    for _ in range((max_iter + 1) // 2 + 1):
-        new_labels, new_sum = cut_with_sum(one_round(one_round(labels)))
-        labels = new_labels
-        if new_sum == prev_sum:
-            return labels.select(F.col("v").alias("doc"), F.col("comp").alias("component"))
-        prev_sum = new_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-
-
-def dedup_groups(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    """Cluster rollup: one row per component with canonical (min) doc
-    and member count — the 'keep one, drop the rest' dedup decision."""
-    comp = connected_components(edges, src, dst, checkpoint_mode=checkpoint_mode)
-    return comp.groupBy("component").agg(
-        F.min("doc").alias("canonical_doc"), F.count(F.lit(1)).alias("n_members")
-    )
 
 
 def components_incremental(
@@ -244,13 +155,8 @@ def connected_components_star(
     Each phase is one groupBy(min) + one join on the same key — the
     same shuffle shape as a round of label propagation, but the edge
     set contracts geometrically, so 64-deep chains settle in ~6 rounds
-    instead of 64.  Same output contract as
-    :func:`connected_components`: (v, component-min) per vertex, and
-    the same recursive-CTE oracle verifies it.
-
-    Use this variant when cluster shapes are unknown (general graphs);
-    keep label propagation for near-dup graphs whose diameter is known
-    to be tiny — fewer fixed per-round costs.
+    instead of 64.  Output: (doc, component-min) per vertex, verified
+    by a recursive-CTE oracle.
     """
     def cut_with_checksum(frame: DataFrame) -> tuple[DataFrame, tuple]:
         # edge-set checksum (count + order-independent hash sum) rides
@@ -280,7 +186,7 @@ def connected_components_star(
     )
     # ONE large+small star round per lineage cut.  r12 measured the
     # two-rounds-per-cut variant (the barrier-halving that wins for
-    # label propagation and pagerank, see those operators): it REGRESSED
+    # pagerank, see that operator): it REGRESSED
     # here — dedup_components_incremental 8.6 → 11.3 s best-of-3
     # same-box A/B — because a star round is 2 joins + 2 aggregates and
     # the inner round's distinct is re-aggregated per consumer (only its

@@ -27,6 +27,7 @@ and AQE skew-join splitting for the rest.
 from __future__ import annotations
 
 import random
+import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,27 +37,29 @@ N_HASHES = 64
 BANDS = 16
 ROWS_PER_BAND = N_HASHES // BANDS
 
-#: Persisted frames owned by the dedup operators.  The signature/
-#: fingerprint persists below are load-bearing (both sides of each LSH
-#: self-join consume them; without the persist the whole shingle→hash
-#: pipeline runs once per consumer), but they can only be released AFTER
-#: the caller materializes the returned lazy frame — so the operator
-#: can't unpersist before returning.  The scope bounds the leak instead:
-#: a small LRU (semantically-identical inputs REUSE the live cache —
+#: Persisted frames owned by the operators — the one persist scope of
+#: the engine (dedup signatures and fingerprints, chunk tables, the
+#: triangle substrate's oriented edges, mining and graph query inputs).
+#: These persists are load-bearing (both sides of each LSH self-join
+#: consume them; without the persist the whole shingle→hash pipeline
+#: runs once per consumer), but they can only be released AFTER the
+#: caller materializes the returned lazy frame — so the operator can't
+#: unpersist before returning.  The scope bounds the leak instead: a
+#: small LRU (semantically-identical inputs REUSE the live cache —
 #: repeated dedup over the same corpus pays the signature pass once;
-#: beyond ``_MAX_SCOPED`` distinct frames the oldest is evicted), and
-#: callers that want a cache-free context call
+#: beyond ``_MAX_SCOPED`` distinct frames the oldest is evicted, with a
+#: ``RuntimeWarning`` if its cache was never built, since its consumer
+#: then recomputes it), and callers that want a cache-free context call
 #: :func:`release_dedup_caches` once they've consumed the results
-#: (tests/test_cache_hygiene.py pins both behaviors).
+#: (tests/test_cache_hygiene.py pins these behaviors).
 _SCOPED_CACHES: list[DataFrame] = []
-#: 6, not 4, since r11: the prefix-jaccard path persists TWO frames per
-#: corpus (the shingle postings and the per-doc sorted array), so a
-#: mixed dedup session's working set (minhash sigs + simhash
-#: fingerprints + both jaccard frames + an incremental pair's two
-#: signature tables) outgrew the old bound and evicted the minhash
-#: cache mid-session (tests/test_plans.py::
-#: test_threshold_sweep_reuses_one_pair_stream caught the eviction).
-_MAX_SCOPED = 6
+#: A mixed dedup session's working set is six frames (minhash sigs +
+#: simhash fingerprints + the prefix-jaccard postings and sorted arrays
+#: + an incremental pair's two signature tables; a smaller bound evicted
+#: the minhash cache mid-session, which
+#: tests/test_plans.py::test_threshold_sweep_reuses_one_pair_stream
+#: caught), plus the two triangle operators' edge frames.
+_MAX_SCOPED = 8
 
 
 def release_dedup_caches() -> int:
@@ -71,12 +74,31 @@ def release_dedup_caches() -> int:
     return n
 
 
+def _cache_built(df: DataFrame) -> bool:
+    """Whether an action has filled ``df``'s cache (False before the
+    first action on it or on any frame derived from it)."""
+    jspark = df.sparkSession._jsparkSession
+    cached = jspark.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
 def _scoped_persist(df: DataFrame) -> DataFrame:
     for cached in _SCOPED_CACHES:
         if cached.sameSemantics(df):
             return cached  # the live cache serves this plan already
     while len(_SCOPED_CACHES) >= _MAX_SCOPED:
-        _SCOPED_CACHES.pop(0).unpersist(blocking=True)
+        evicted = _SCOPED_CACHES.pop(0)
+        if not _cache_built(evicted):
+            warnings.warn(
+                "evicting a persisted frame whose cache was never built; its "
+                f"consumer will recompute it (more than {_MAX_SCOPED} scoped "
+                "frames are live)",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        evicted.unpersist(blocking=True)
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _SCOPED_CACHES.append(df)
     return df

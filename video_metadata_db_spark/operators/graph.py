@@ -20,7 +20,7 @@ discipline this repo's oracles require):
   the (node-sized, edge-free) rank frame moves,
 - lineage is cut per round (``localCheckpoint``) so the plan does not
   grow superlinearly across iterations — same trap and same fix as
-  ``connected_components``.
+  ``connected_components_star``.
 
 Cross-engine determinism: a PageRank round sums FLOAT contributions
 per node, and a plain double ``SUM`` depends on partition order.  Each
@@ -167,37 +167,6 @@ def pagerank_oracle_sql(
     return ",\n".join(parts)
 
 
-#: Edge-frame persists owned by the triangle substrate — a bounded FIFO
-#: (NOT a semantic LRU: every call persists ITS OWN frame, so per-query
-#: bench cost never depends on what ran before; the bound only caps the
-#: session-lifetime cache leak, since the operator cannot unpersist a
-#: frame its caller has not consumed yet).  2 = the two triangle
-#: operators' frames in a mixed session.
-_GRAPH_CACHES: list[DataFrame] = []
-_MAX_GRAPH_CACHES = 2
-
-
-def release_graph_caches() -> int:
-    """Unpersist every edge frame still held by the triangle substrate;
-    returns how many were released.  Results consumed after release
-    simply recompute (correct, one extra pass)."""
-    n = 0
-    while _GRAPH_CACHES:
-        _GRAPH_CACHES.pop().unpersist(blocking=True)
-        n += 1
-    return n
-
-
-def _graph_persist(df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    while len(_GRAPH_CACHES) >= _MAX_GRAPH_CACHES:
-        _GRAPH_CACHES.pop(0).unpersist(blocking=True)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _GRAPH_CACHES.append(df)
-    return df
-
-
 def _oriented_triangles(
     edges: DataFrame, a: str, b: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -230,12 +199,15 @@ def _oriented_triangles(
     steal-clean windows only): persist is also marginally FASTER
     locally (triangle_count 1.61 vs 1.70 s, edge support 1.55 vs
     1.58 s best-of-3) — no eager materialization job, one fewer
-    barrier.  The persisted frames are bounded by the small
-    ``_GRAPH_CACHES`` FIFO (per-call persist, NO cross-query reuse —
-    per-query bench numbers stay session-order-independent, unlike the
-    dedup LRU's documented coupling); callers wanting a cache-free
-    session call :func:`release_graph_caches`.
+    barrier.  The persisted frame joins the engine's one bounded scope
+    (:func:`~.dedup._scoped_persist`); it is never reused across calls
+    (``deg`` is a fresh ``localCheckpoint`` each time, so no live entry
+    has the same semantics), which keeps per-query bench numbers
+    session-order-independent.  Callers wanting a cache-free session
+    call :func:`~.dedup.release_dedup_caches`.
     """
+    from .dedup import _scoped_persist
+
     edges = edges.select(F.col(a).alias("s1"), F.col(b).alias("s2"))
     deg = (
         edges.select(F.col("s1").alias("node"))
@@ -253,7 +225,7 @@ def _oriented_triangles(
         )
     )
     fwd = F.struct(F.col("d1"), F.col("s1")) < F.struct(F.col("d2"), F.col("s2"))
-    oriented = _graph_persist(
+    oriented = _scoped_persist(
         ed.select(
             F.when(fwd, F.col("s1")).otherwise(F.col("s2")).alias("u"),
             F.when(fwd, F.col("s2")).otherwise(F.col("s1")).alias("v"),
@@ -377,7 +349,7 @@ def label_propagation(
     the same scatter/gather shape as :func:`pagerank`, linear in edges,
     shuffling only (node, label, count) triples.  The fixed unrolled
     round count keeps lineage bounded; for high round counts at cluster
-    scale, checkpoint per round exactly as `connected_components` does.
+    scale, checkpoint per round exactly as `connected_components_star` does.
     """
     e = edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -459,7 +431,7 @@ def hits_bipartite(
         """One half-round: gather + max-normalize.  The per-side max
         rides the checkpoint materialization itself via ``observe``
         (CollectMetrics merges per-task partials during the SAME job
-        that writes the cut — the `connected_components` discipline),
+        that writes the cut — the `connected_components_star` discipline),
         so each half-round is exactly ONE job, not a checkpoint job
         plus a second max() pass over the cut."""
         obs = Observation()

@@ -121,56 +121,6 @@ def extract_features(assets: DataFrame, batch_partitions: int | None = None) -> 
     return src.mapInPandas(run, FEATURE_SCHEMA)
 
 
-#: Resized-image rows: payload out + before/after shape metadata.
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("target_w", T.IntegerType(), True),
-        T.StructField("target_h", T.IntegerType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-def fake_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in for an image resize: systematic byte
-    sampling to exactly ``w*h`` bytes (repeat-pad when upscaling).
-    Real decode→resize→encode drops in here (PIL ``Image.resize``)."""
-    n = w * h
-    if not payload:
-        return b"\x00" * n
-    stride = max(len(payload) // n, 1)
-    sampled = payload[::stride][:n]
-    return (sampled * (n // len(sampled) + 1))[:n]
-
-
-def resize_images(assets: DataFrame, w: int = 8, h: int = 8) -> DataFrame:
-    """mapInPandas resize over image assets — 1 row in → 1 row out,
-    payload replaced, shape metadata attached.
-
-    Scale shape: identical to feature extraction — binary-batch Arrow
-    transfer, per-asset error isolation, no shuffle (narrow map)."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    resized = fake_resize(row.payload, w, h)
-                    out.append((row.asset_id, resized, len(resized), w, h, None))
-                except Exception as exc:
-                    out.append((row.asset_id, None, None, w, h, str(exc)[:200]))
-            yield pd.DataFrame(
-                out,
-                columns=["asset_id", "payload", "n_bytes", "target_w", "target_h", "error"],
-            )
-
-    return assets.filter(F.col("kind") == "image").mapInPandas(run, RESIZE_SCHEMA)
-
-
 #: One row per sampled frame (UDTF shape: 1 video → N frames).
 FRAME_SCHEMA = T.StructType(
     [
@@ -192,7 +142,7 @@ def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
     decoder (pyav/ffmpeg seek) drops into ``_frame_of`` unchanged.  At
     scale the explode happens executor-side inside Arrow batches — the
     driver never sees frame bytes, and downstream per-frame operators
-    (resize → feature-extract → dedup) compose on this table.
+    (feature-extract → dedup) compose on this table.
     """
     import pandas as pd
 

@@ -118,26 +118,16 @@ SYNTHETIC_FILENAME_SQL = (
 )
 
 
-def merge_metadata_dbs(
-    dbs: list[DataFrame],
-    sort_cols: list[Column] | None = None,
-    allow_missing_columns: bool = False,
-) -> DataFrame:
+def merge_metadata_dbs(dbs: list[DataFrame], sort_cols: list[Column]) -> DataFrame:
     """Merge mode: union-all N databases then globally sort (:1361-1456).
 
     The reference concatenates TSV files and shells out to OS ``sort``
     over the whole line; here it is ``unionByName`` + a typed ``orderBy``
     (range-partitioned shuffle sort — scales out, spills natively).
-
-    ``allow_missing_columns=True`` merges dbs written by older engine
-    versions that lack newer columns (NULL-filled) — schema evolution
-    the byte-concatenating reference cannot express.
+    Empty ``sort_cols`` leaves the order to the caller's writer (the
+    CLI's whole-line sort).  Every db must carry the same columns.
     """
-    unioned = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing_columns), dbs
-    )
-    if sort_cols is None:
-        sort_cols = [F.col(c).desc() for c in unioned.columns[:2]]
+    unioned = reduce(lambda a, b: a.unionByName(b), dbs)
     return unioned.orderBy(*sort_cols) if sort_cols else unioned
 
 

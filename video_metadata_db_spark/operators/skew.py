@@ -17,7 +17,7 @@ runtime; these are the PLAN-level tools for the cases AQE can't fix:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -65,23 +65,3 @@ def two_stage_distinct_count(
         .agg(F.count(F.lit(1)).alias(out_col))
     )
 
-
-def top_frequency_keys(df: DataFrame, key: str | Column, k: int = 10) -> DataFrame:
-    """Skew diagnosis: the k heaviest keys with their row share —
-    run this before choosing broadcast/salt/AQE strategy.
-
-    The denominator is a broadcast cross-join against a 1-row total of
-    the per-key aggregate — no global window, so even an EXTREME key
-    cardinality (billions of distinct keys) never funnels through a
-    single partition.  Costs a second pass over the aggregate; callers
-    diagnosing a frame they'll reuse should persist it first.
-    """
-    per_key = df.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
-    total = per_key.agg(F.sum("n_rows").alias("_total"))
-    return (
-        per_key.crossJoin(F.broadcast(total))
-        .withColumn("share", F.round(F.col("n_rows") / F.col("_total"), 6))
-        .drop("_total")
-        .orderBy(F.col("n_rows").desc())
-        .limit(k)
-    )

@@ -272,10 +272,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(log n) rounds): the Hamming-8 graph at sf0.1 MEASURES diameter
     ~9 (min-label propagation took 9 rounds / 8.7s vs star's ~6 phases
     / 5.5s warm), and near-dup chains only grow with corpus size, so
-    the logarithmic variant is the scale-correct default.  Plain
-    propagation stays driver-checked via its own operator tests and
-    remains right for known-low-diameter graphs.  The oracle is a
-    recursive-CTE transitive closure to the same min-reachable-id."""
+    the logarithmic variant is the scale-correct default.  The oracle
+    is a recursive-CTE transitive closure to the same min-reachable-id."""
     from ..operators.components import connected_components_star
     from ..operators.dedup import simhash_near_pairs
 
@@ -329,12 +327,9 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc whose cluster has a smaller (canonical) member.  pairs →
     connected components → filter(doc != label); docs absent from the
     list (singletons included) are the keep set.  At scale this joins
-    back to the corpus as a broadcast/shuffled anti join.
-
-    Deliberately runs the large-star/small-star variant (where
-    ``dedup_components`` runs label propagation) so BOTH clustering
-    algorithms are oracle-checked against the same recursive-CTE
-    transitive closure."""
+    back to the corpus as a broadcast/shuffled anti join.  The oracle
+    is the same recursive-CTE transitive closure as
+    ``dedup_components``'s."""
     from ..operators.components import connected_components_star
     from ..operators.dedup import simhash_near_pairs
 

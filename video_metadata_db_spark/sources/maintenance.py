@@ -159,61 +159,3 @@ def zorder_parquet(
     )
     out.write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir)
-
-
-# --------------------------------------------------------------- MERGE ---
-# Copy-on-write MERGE and merge-on-read delete files over a plain
-# parquet directory — the write-path halves of operators/mor.py (scale
-# notes there).  COW rewrites to a fresh directory (never in place: a
-# Spark overwrite of the directory being read races its own scan);
-# delete files accumulate under ``_deletes/`` and are applied at read
-# time with one anti-join, so a delete costs O(|keys|) writes, not a
-# table rewrite.
-
-_DELETES_SUBDIR = "_deletes"
-
-
-def merge_upsert_cow(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    updates: DataFrame,
-    key_cols: list[str],
-) -> DataFrame:
-    """Copy-on-write MERGE: read ``in_dir``, apply
-    :func:`..operators.mor.merge_upsert`, write the merged table to
-    ``out_dir``, and return the frame read back from it."""
-    from ..operators.mor import merge_upsert
-
-    base = spark.read.parquet(in_dir)
-    merged = merge_upsert(base, updates, key_cols)
-    merged.write.mode("overwrite").parquet(out_dir)
-    return spark.read.parquet(out_dir)
-
-
-def write_delete_keys(table_dir: str, keys: DataFrame) -> None:
-    """Append an equality-delete file (the distinct key rows) under
-    ``table_dir/_deletes/`` — O(|keys|) cost, no table rewrite."""
-    keys.distinct().write.mode("append").parquet(f"{table_dir}/{_DELETES_SUBDIR}")
-
-
-def read_with_deletes(
-    spark: SparkSession, table_dir: str, key_cols: list[str]
-) -> DataFrame:
-    """Merge-on-read scan of ``table_dir``: the base rows minus every
-    key present in any accumulated delete file.  One left-anti join;
-    the delete set is typically broadcast-sized, and the base scan
-    still enjoys pushdown/pruning (the anti-join sits above the
-    scan, not inside it)."""
-    base = spark.read.parquet(table_dir)
-    jvm = spark._jvm
-    dpath = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{_DELETES_SUBDIR}")
-    fs = dpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(dpath):
-        return base
-    deletes = spark.read.parquet(f"{table_dir}/{_DELETES_SUBDIR}")
-    return base.join(
-        F.broadcast(deletes.select(*key_cols).distinct()),
-        on=list(key_cols),
-        how="left_anti",
-    )

@@ -20,8 +20,13 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DataType,
+    DecimalType,
+    IntegerType,
     LongType,
+    MapType,
+    ShortType,
     StructField,
     StructType,
     TimestampNTZType,
@@ -47,20 +52,37 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _spark_type(t: pa.DataType, int96: bool) -> DataType:
-    """The type Spark's parquet schema inference gives a top-level
-    column of Arrow type ``t``: timestamps without a zone are
-    TIMESTAMP_NTZ, TIMESTAMP(NANOS) is its raw int64 (the
-    ``nanosAsLong`` flag), and INT96 — Spark's own default timestamp
+#: Spark's inference widens an unsigned parquet int to the next signed type.
+_UNSIGNED = {8: ShortType(), 16: IntegerType(), 32: LongType(), 64: DecimalType(20, 0)}
+
+
+def _spark_type(t: pa.DataType, int96: bool = False) -> DataType:
+    """The type Spark's parquet schema inference gives a column of
+    Arrow type ``t``, at any nesting depth: timestamps without a zone
+    are TIMESTAMP_NTZ, TIMESTAMP(NANOS) is its raw int64 (the
+    ``nanosAsLong`` flag), INT96 — Spark's own default timestamp
     encoding, which pyarrow also reports as nanos — is a plain
-    timestamp."""
+    timestamp, a duration is its int64 storage, unsigned ints widen,
+    an all-null column is int, and every nested field is nullable."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_type
 
     if int96:
         return TimestampType()
-    if pa.types.is_timestamp(t) and t.unit == "ns":
+    if pa.types.is_timestamp(t) and t.unit == "ns" or pa.types.is_duration(t):
         return LongType()
+    if pa.types.is_unsigned_integer(t):
+        return _UNSIGNED[t.bit_width]
+    if pa.types.is_null(t):
+        return IntegerType()
+    if pa.types.is_dictionary(t):
+        return _spark_type(t.value_type)
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return ArrayType(_spark_type(t.value_type), True)
+    if pa.types.is_map(t):
+        return MapType(_spark_type(t.key_type), _spark_type(t.item_type), True)
+    if pa.types.is_struct(t):
+        return StructType([StructField(f.name, _spark_type(f.type), True) for f in t])
     return from_arrow_type(t, prefer_timestamp_ntz=True)
 
 
@@ -71,7 +93,9 @@ def _footer_schema(path: str) -> StructType:
     directory of part files; like Spark, take the first data file's
     footer (pyarrow resolves local paths and URIs alike, and skips
     ``_``/``.`` files).  Every field is nullable, as in Spark's own
-    inference.
+    inference.  An INT96 timestamp inside a nested column raises
+    ``ValueError``: pyarrow reports it as nanos, which inference types
+    differently.
 
     pyarrow (and pandas, under ``from_arrow_type``) is imported here,
     not at module level: the CLI imports this package but reads no
@@ -88,6 +112,12 @@ def _footer_schema(path: str) -> StructType:
         for i in range(len(parquet_schema))
         if parquet_schema.column(i).physical_type == "INT96"
     }
+    nested_int96 = sorted(p.split(".")[0] for p in int96 if "." in p)
+    if nested_int96:
+        raise ValueError(
+            f"column {nested_int96[0]!r} of {path}: a nested INT96 timestamp "
+            "has no footer-schema mapping"
+        )
     return StructType(
         [
             StructField(f.name, _spark_type(f.type, f.name in int96), True)
@@ -128,10 +158,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.schema(_footer_schema(path)).parquet(path)
     return _normalize_events(raw) if name == "events" else raw
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -80,71 +80,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals through ``transformWithState``
-    (Spark 4's arbitrary-state API, successor of
-    ``applyInPandasWithState``): an object-oriented StatefulProcessor
-    with named, typed state slots — the surface new stateful operators
-    should target (it adds timers, TTL, and multiple state variables
-    per key; requires the RocksDB state store provider).
-
-    Same output contract as :func:`running_user_totals`, so the same
-    batch-aggregate oracle verifies both implementations.
-
-    CONTAINER CONSTRAINT: the TWS Python runner needs a working
-    ``google.protobuf`` (its state server speaks protobuf); this CI
-    image ships NO protobuf at all (``import google.protobuf`` →
-    ModuleNotFoundError: No module named 'google'; re-probed each
-    round, last r11 2026-08-16), so the API can only be smoke-checked
-    where protobuf imports
-    (``tests/test_streaming.py::test_transform_with_state_api`` skips
-    otherwise, recording the exact reason).  The
-    ``applyInPandasWithState`` implementation above is the one the
-    driver gate exercises."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            if self._state.exists():
-                n, total, last_us = self._state.get()
-            else:
-                n, total, last_us = 0, 0.0, 0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    last_us = max(
-                        last_us,
-                        int(pd.to_datetime(pdf["ts"]).astype("int64").max() // 1000),
-                    )
-            self._state.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                    "last_seen_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            _RunningTotals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 SESSION_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
