@@ -13,7 +13,7 @@ from video_metadata_db_spark.session import get_spark  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
-#: The 341-query oracle sweep plus a handful of other multi-minute tests
+#: The 340-query oracle sweep plus a handful of other multi-minute tests
 #: push the full suite to 39-66 min — past the driver's pytest window
 #: (VERIFY_r11 tests_ok:false was a timeout at ~63% with zero failures,
 #: VERDICT r11 item 1).  Tests marked ``full`` are therefore skipped by

@@ -43,6 +43,29 @@ def test_checked_window_invariants():
     assert not missing, f"checked-window queries without oracle: {missing}"
 
 
+#: Queries that share one oracle on purpose: the same result reached as
+#: a batch build, an incremental maintainer and a stream, so each run
+#: checks a different capability against one truth.
+SHARED_ORACLES = [
+    {"heavy_hitters_cms", "stream_cms_heavy_hitters"},
+    {"dedup_components", "dedup_components_incremental", "stream_incremental_dedup"},
+]
+
+
+def test_no_two_queries_share_an_oracle_unless_allowed():
+    """Two queries checked against the same oracle SQL compute the same
+    thing; unless they are listed batch/incremental/streaming forms, the
+    second one is a fork of the first and belongs in the same entry."""
+    from video_metadata_db_spark.plans import ORACLES
+
+    by_sql: dict[str, set[str]] = {}
+    for name, sql in ORACLES.items():
+        by_sql.setdefault(" ".join(sql.split()), set()).add(name)
+    shared = [names for names in by_sql.values() if len(names) > 1]
+    unexpected = [sorted(n) for n in shared if n not in SHARED_ORACLES]
+    assert not unexpected, f"queries with identical oracle SQL: {unexpected}"
+
+
 def test_broken_query_module_fails_the_registry_import():
     """A query module that cannot be imported must fail
     ``from ...plans import QUERIES`` — never leave a registry with that

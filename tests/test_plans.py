@@ -303,16 +303,16 @@ def test_q16_not_in_is_broadcast_anti(spark):
     assert "CartesianProduct" not in p
 
 
-def test_kmeans_assignment_is_python_free(spark):
-    """The corpus-sized k-means assignment pass must stay in codegen:
-    no Arrow/Python evaluation operators anywhere in the plan — the
-    centroids ride as literals, so the only plan nodes are scan,
-    project, and the output sort."""
+def test_kmeans_assignment_is_one_map_in_pandas(spark):
+    """The corpus-sized k-means assignment is one Arrow-batched
+    ``MapInPandas`` pass: the centroids ride in its closure, so the plan
+    never joins the corpus against them and runs no per-row Python
+    UDF."""
     p = plan_of(spark, "kmeans_clusters")
+    assert "MapInPandas" in p
     assert "ArrowEvalPython" not in p
     assert "BatchEvalPython" not in p
-    assert "mapInPandas" not in p
-    assert "Join" not in p, "assignment must not join — centroids are literals"
+    assert "Join" not in p, "assignment must not join — centroids ship in the closure"
 
 
 def test_tfidf_doc_count_broadcasts(spark):

@@ -3,7 +3,7 @@
 The driver does the same at sf0.01; this catches breakage earlier.
 Queries without an oracle get a run-and-count check only.
 
-The exhaustive 341-query sweep is marked ``full`` (see pytest.ini /
+The exhaustive 340-query sweep is marked ``full`` (see pytest.ini /
 conftest): it takes tens of minutes, which blew the driver's pytest
 window (VERDICT r11 item 1).  The default run keeps
 ``test_query_smoke`` — the 50-name per-family driver window

@@ -656,3 +656,39 @@ def test_stateful_gap_sessions_out_of_order_across_batches(spark, tmp_path):
     us = lambda h, m: int(_t(h, m).replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000  # noqa: E731
     # end stays 12:00 — NOT regressed to the late 11:00 arrival
     assert out == [(1, us(10, 0), us(12, 0), 3)]
+
+
+_SCRATCH_SCRIPT = """
+import glob, os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from video_metadata_db_spark.plans import QUERIES
+from video_metadata_db_spark.session import get_spark
+spark = get_spark("vmdb-scratch", shuffle_partitions=2)
+spark.sparkContext.setLogLevel("ERROR")
+n = QUERIES["stream_parquet_sink"](spark, {sf!r}).count()
+assert n > 0, n
+live = glob.glob(os.path.join(tempfile.gettempdir(), "vmdb_*"))
+print("SCRATCH_DIRS_WHILE_RUNNING", len(live))
+"""
+
+
+def test_query_scratch_dirs_are_removed_at_exit(tmp_path):
+    """A streaming query stages its source, checkpoint and sink under a
+    ``vmdb_*`` temp directory; it must be gone once the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_CPUS="2")
+    proc = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_SCRIPT.format(repo=repo, sf=SF)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    # the query really staged under TMPDIR, so the check below is not vacuous
+    assert "SCRATCH_DIRS_WHILE_RUNNING 1" in proc.stdout, proc.stdout
+    assert not list(tmp_path.glob("vmdb_*"))

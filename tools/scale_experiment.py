@@ -106,7 +106,7 @@ def measured(spark: SparkSession, label: str, factor: int, fn) -> dict:
 
 
 def run_factor(spark: SparkSession, factor: int) -> list[dict]:
-    from video_metadata_db_spark.operators.clustering import kmeans_assign_arrow
+    from video_metadata_db_spark.operators.clustering import kmeans_assign
     from video_metadata_db_spark.operators.dedup import (
         band_buckets,
         minhash_lsh_dedup,
@@ -116,7 +116,7 @@ def run_factor(spark: SparkSession, factor: int) -> list[dict]:
         simhash_near_pairs,
     )
     from video_metadata_db_spark.operators.components import connected_components_star
-    from video_metadata_db_spark.operators.similarity import embedding_near_dup_arrow
+    from video_metadata_db_spark.operators.similarity import embedding_near_dup
     from video_metadata_db_spark.plans import QUERIES
 
     sf_dir = make_corpus(spark, factor)
@@ -184,23 +184,20 @@ def run_factor(spark: SparkSession, factor: int) -> list[dict]:
 
     out.append(measured(spark, "dedup_components", factor, components_counts))
 
-    # --- semantic dedup, scale-path parameterization: k ~ n/250,
-    # ARROW assignment — the path the registered dedup_semantic ships
-    # (the codegen fold's per-row cost ∝ k·dim makes it the wrong
-    # physical strategy precisely at the large k this experiment
-    # exercises; both paths are pinned identical at oracle k)
+    # --- semantic dedup, scale-path parameterization: k ~ n/250, the
+    # operators the registered dedup_semantic ships
     def semantic_counts() -> dict:
         k = max(8, n_vecs // 250)
         # ONE training serves both the candidate count and the scoring
         # pass — duplicating it would double the recorded wall/shuffle
         assigned = (
-            kmeans_assign_arrow(emb, k=k, n_iter=2)
+            kmeans_assign(emb, k=k, n_iter=2)
             .select("vec_id", "cluster")
             .persist()
         )
         sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("c"))
         cand = sizes.agg(F.sum(F.col("c") * (F.col("c") - 1))).first()[0] or 0
-        scored = embedding_near_dup_arrow(
+        scored = embedding_near_dup(
             emb.join(assigned, "vec_id"), threshold=0.5, block_col="cluster"
         ).count()
         assigned.unpersist()

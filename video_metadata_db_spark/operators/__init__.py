@@ -5,7 +5,7 @@ from .chunking import (
     doc_containment_pairs,
     sliding_grams,
 )
-from .clustering import cluster_profile, kmeans_assign, kmeans_assign_arrow
+from .clustering import cluster_profile, kmeans_assign
 from .components import components_incremental, connected_components_star
 from .dedup import (
     band_buckets,
@@ -58,7 +58,6 @@ __all__ = [
     "connected_components_star",
     "exact_dedup",
     "kmeans_assign",
-    "kmeans_assign_arrow",
     "extract_features",
     "filter_candidates",
     "global_row_number",

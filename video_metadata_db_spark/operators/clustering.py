@@ -6,10 +6,9 @@ stacks) needs vectors grouped by meaning: cluster the embedding space,
 then dedup/sample WITHIN clusters.  This is Lloyd's algorithm with
 Spark doing the heavy half:
 
-- **assignment** (the corpus-sized pass) is pure Catalyst: per-row
-  squared-L2 against k broadcast centroid literals via
-  ``zip_with``/``aggregate`` folds — whole-stage codegen, no Python,
-  no shuffle;
+- **assignment** (the corpus-sized pass) is one Arrow-batched numpy
+  mat-mul per batch (``mapInPandas``) against the k centroids, which
+  ride along in the closure — no shuffle;
 - **update** is one tiny aggregate: per-dimension mean COLUMNS over
   the cluster key (k×dim cells, map-side partials, no row inflation),
   and only k×dim doubles ever reach the driver (same discipline as the
@@ -20,16 +19,15 @@ Determinism contract (what makes the full DuckDB value-oracle
 possible): initial centroids are the vectors with the k smallest ids;
 per-iteration centroid means are rounded to ``round_dp`` decimals so
 the two engines' different partial-sum orders cannot leak into the
-next assignment (float drift ~1e-13 vs a 5e-7 rounding boundary);
-distance folds run strictly left-to-right on both sides; argmin ties
-break toward the lowest cluster id; an emptied cluster keeps its
-previous centroid.
+next assignment (BLAS-vs-fold drift ~1e-9 vs a 5e-7 rounding
+boundary); argmin ties break toward the lowest cluster id; an emptied
+cluster keeps its previous centroid.
 
-At 100 TB: k×dim literals broadcast with the plan (a few KB); each
-iteration is one corpus scan + one (k·dim)-cell aggregate.  Iteration
-count is fixed (standard for corpus curation — convergence-to-epsilon
-buys nothing over 5-10 fixed rounds); driver memory holds k×dim
-doubles regardless of corpus size.
+At 100 TB: the k×dim centroids ship with the task closure (a few
+KB); each iteration is one corpus scan + one (k·dim)-cell aggregate.
+Iteration count is fixed (standard for corpus curation —
+convergence-to-epsilon buys nothing over 5-10 fixed rounds); driver
+memory holds k×dim doubles regardless of corpus size.
 """
 
 from __future__ import annotations
@@ -43,10 +41,10 @@ def _sq_dist_sql(vec_sql: str, centroid: list[float]) -> str:
     ``vec_sql`` to a literal centroid, strictly left-to-right
     (bit-reproducible across engines).
 
-    A string, not a Column, deliberately: the assignment expression is
-    k of these folds, each zipping dim literals — built as nested
-    Column calls that is thousands of py4j round-trips and ~3 s of
-    DRIVER time per iteration at k-means sizes (measured at k=16×4,
+    A string, not a Column, deliberately: the product-quantization
+    assignment is k of these folds, each zipping dim literals — built
+    as nested Column calls that is thousands of py4j round-trips and
+    ~3 s of DRIVER time per iteration at k-means sizes (measured at k=16×4,
     dim=16), repeated every call because centroids change.  One
     ``F.expr`` parse of the whole tree is milliseconds, and parses to
     the IDENTICAL expression (pinned by
@@ -76,41 +74,58 @@ def _dists_array(vec_sql: str, centroids: list[list[float]]) -> F.Column:
     )
 
 
-def _assign_to(frame: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, v, cluster, sq_dist) vs literal centroids — the codegen
-    fold assignment (argmin ties to the lowest cluster).
+def _assign(frame: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """(vec_id, v, cluster, sq_dist) vs the centroids — each Arrow batch
+    (``mapInPandas``) computes all k distances as one BLAS
+    ``|v|² − 2·V@Cᵀ + |c|²`` expansion, so per-row cost is a dense flop
+    count rather than k·dim interpreted ``zip_with``/``aggregate``
+    evaluations.  Argmin ties go to the lowest cluster: numpy
+    ``argmin`` returns the first minimum.
 
-    The fold array is projected ONCE and argmin/min read from the
-    projected column: referencing the k-fold array inline at each of
-    its three uses would triple the expression tree the optimizer
-    walks per iteration (driver-side cost; CollapseProject keeps the
-    projection barrier because higher-order folds are non-cheap)."""
-    with_d = frame.select(
-        "vec_id", "v", _dists_array("v", centroids).alias("_dists")
+    The BLAS expansion's ~1e-9 summation-order drift sits five orders
+    below the 5e-7 boundary of the trainer's centroid rounding, so the
+    result matches the left-to-right DuckDB fold (pinned by
+    ``tests/test_mining.py::test_kmeans_matches_pure_python_reference``
+    and the ``kmeans_clusters`` oracle)."""
+    import numpy as np
+    import pandas as pd
+
+    C = np.asarray(centroids, dtype=np.float64)  # k×dim, broadcast via closure
+    c_sq = (C * C).sum(axis=1)
+
+    def score(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            d = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c_sq[None, :]
+            cl = d.argmin(axis=1)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "v": pdf["v"],
+                    "cluster": cl.astype("int64"),
+                    "sq_dist": d[np.arange(len(cl)), cl],
+                }
+            )
+
+    # the id type follows the input (string/decimal id domains included)
+    id_type = frame.schema["vec_id"].dataType.simpleString()
+    return frame.mapInPandas(
+        score, f"vec_id {id_type}, v array<double>, cluster long, sq_dist double"
     )
-    return with_d.select(
-        "vec_id",
-        "v",
-        (F.array_position("_dists", F.array_min("_dists")) - 1).alias("cluster"),
-        F.array_min("_dists").alias("sq_dist"),
-    )
 
 
-def lloyds_centroids(
-    df: DataFrame, k: int, n_iter: int, round_dp: int = 6, assign_fn=None
-) -> list[list[float]]:
+def lloyds_centroids(df: DataFrame, k: int, n_iter: int, round_dp: int = 6) -> list[list[float]]:
     """Train centroids over a (vec_id, v: array<double>) frame under
     the determinism contract (smallest-id seeds, ``round_dp``-quantized
     updates, lowest-cluster argmin ties, emptied clusters keep their
     centroid).  The frame is persisted for the iteration loop and
     released before returning; only k×dim doubles reach the driver.
-    ``assign_fn(frame, centroids)`` is the per-iteration assignment
-    (default: the codegen fold; the Arrow variant passes its BLAS
-    assignment) — keeping the trainer single-sourced means a contract
-    change cannot silently diverge the two physical strategies.
-    Shared by :func:`kmeans_assign`, :func:`kmeans_assign_arrow`, and
-    the product-quantization codebooks (operators/quantization.py)."""
-    assign_fn = assign_fn or _assign_to
+    The trainer behind :func:`kmeans_assign`; the product-quantization
+    codebooks (operators/quantization.py) run their own fused
+    multi-subspace trainer under the same contract and only borrow
+    :func:`_dists_array`."""
     df = df.persist()
     # seed: k smallest ids — a driver action over k rows, not row data
     seed_rows = df.orderBy("vec_id").limit(k).collect()
@@ -120,7 +135,7 @@ def lloyds_centroids(
     centroids: list[list[float]] = [list(r["v"]) for r in seed_rows]
     dim = len(centroids[0])
     for _ in range(n_iter):
-        assigned = assign_fn(df, centroids)
+        assigned = _assign(df, centroids)
         # (cluster, dim) means as dim aggregate COLUMNS — one map-side-
         # partial aggregate, no posexplode (which would inflate the
         # shuffle by dim× for the same k×dim cells).  The round_dp
@@ -166,81 +181,7 @@ def kmeans_assign(
         F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     centroids = lloyds_centroids(df, k, n_iter, round_dp)
-    return _assign_to(df, centroids).select(
-        "vec_id", "cluster", F.round("sq_dist", round_dp).alias("sq_dist")
-    )
-
-
-def kmeans_assign_arrow(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
-) -> DataFrame:
-    """Lloyd's with the assignment pass as an Arrow-batched numpy
-    mat-mul (``mapInPandas``) — the LARGE-k scale path.
-
-    The codegen-fold assignment in :func:`kmeans_assign` costs
-    ∝ k·dim interpreted expression evaluations PER ROW (zip_with /
-    aggregate are interpreted): measured ×5.6 wall at k 8→80 in the
-    round-5 scale experiment.  Here each Arrow batch computes all k
-    distances as one BLAS ``|v|² − 2·V@Cᵀ + |c|²`` expansion, so
-    per-row cost is a dense flop count, independent of expression
-    interpretation — the same fold→Arrow trade proven bit-identical
-    for cosine scoring in ``operators/similarity.py``.
-
-    Same determinism contract as the fold version (smallest-id seeds,
-    6-dp quantized centroid updates, argmin ties to the lowest cluster
-    — numpy ``argmin`` returns the first minimum index): the two
-    variants' outputs are asserted IDENTICAL by
-    ``tests/test_mining.py::test_kmeans_arrow_matches_fold``, because
-    the 1e-9-scale summation-order drift between the fold and the BLAS
-    expansion sits five orders below the 5e-7 rounding boundary the
-    update quantization imposes.  The fold variant stays the
-    DuckDB-oracle surface at oracle-sized k.
-    """
-    import numpy as np
-    import pandas as pd
-
-    df = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    # id type follows the input (the fold variant is id-type-agnostic;
-    # hardcoding 'long' here would break the documented equivalence for
-    # string/decimal id domains)
-    id_type = df.schema["vec_id"].dataType.simpleString()
-
-    def assign(frame: DataFrame, cents: list[list[float]]) -> DataFrame:
-        C = np.asarray(cents, dtype=np.float64)  # k×dim, broadcast via closure
-        c_sq = (C * C).sum(axis=1)
-
-        def score(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                d = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c_sq[None, :]
-                cl = d.argmin(axis=1)  # first (lowest) index on ties
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "v": pdf["v"],
-                        "cluster": cl.astype("int64"),
-                        "sq_dist": d[np.arange(len(cl)), cl],
-                    }
-                )
-
-        return frame.mapInPandas(
-            score,
-            f"vec_id {id_type}, v array<double>, cluster long, sq_dist double",
-        )
-
-    # the shared trainer with the Arrow assignment plugged in — the
-    # determinism contract lives in ONE place for both variants
-    centroids = lloyds_centroids(df, k, n_iter, round_dp, assign_fn=assign)
-    return assign(df, centroids).select(
+    return _assign(df, centroids).select(
         "vec_id", "cluster", F.round("sq_dist", round_dp).alias("sq_dist")
     )
 

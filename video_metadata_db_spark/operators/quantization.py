@@ -11,9 +11,9 @@ distances, read from an (m × k) lookup table built per query.
 
 Spark-first layout:
 
-- **codebooks**: ``m`` independent Lloyd's runs over the subspace
-  slices, via the shared deterministic trainer
-  (:func:`~.clustering.lloyds_centroids` — smallest-id seeds, 6-dp
+- **codebooks**: ``m`` Lloyd's runs over the subspace slices, fused
+  into one pass per iteration under the determinism contract of
+  :func:`~.clustering.lloyds_centroids` (smallest-id seeds, 6-dp
   quantized updates) so the ENTIRE construction replays in DuckDB SQL
   and both registered queries carry full value oracles.
 - **encode**: per-subspace argmin against ≤ k broadcast centroid
@@ -171,8 +171,9 @@ def pq_encode(
     broadcast literals: scan-only, no shuffle, no Python."""
     m = len(codebooks)
     sub_dim = len(codebooks[0][0])
-    # fold arrays projected once, argmins read from the projection —
-    # same single-copy-tree discipline as _assign_to
+    # fold arrays projected once, argmins read from the projection:
+    # referencing each fold array inline at both uses would double the
+    # expression tree the optimizer walks (driver-side cost)
     with_d = emb.select(
         F.col(id_col).alias("vec_id"),
         *[

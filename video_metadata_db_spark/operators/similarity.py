@@ -155,59 +155,6 @@ def lsh_topk(
     )
 
 
-def embedding_near_dup(
-    embeddings: DataFrame,
-    threshold: float = 0.5,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-dup candidates: each vector's most-similar
-    neighbor *within its block*, flagged ``is_near_dup`` at ``threshold``.
-
-    The blocking key turns the O(n²) all-pairs cosine into an equi-join:
-    pairs are only scored inside a block (here the corpus ``label``; at
-    100 TB a coarse quantizer / LSH bucket plays the same role — see
-    ``lsh_bucket``).  Norms are computed once per vector on the map side
-    of the block shuffle, so the post-join work is one dot product per
-    in-block pair.  Per-vector top-1 goes through WindowGroupLimit — no
-    full sort of the pair set.
-    """
-    emb = embeddings.select(
-        F.col(id_col),
-        F.col(block_col).alias("block"),
-        _to_double(F.col(vec_col)).alias("v"),
-    ).withColumn("n", norm(F.col("v")))
-    left = emb.select(
-        F.col(id_col).alias("vec_id"), "block", F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    right = emb.select(
-        F.col(id_col).alias("neighbor_id"), "block", F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    scored = (
-        left.join(right, "block")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            "cos_sim",
-            (F.col("cos_sim") >= threshold).alias("is_near_dup"),
-        )
-    )
-
-
 # ----------------------------------------------------------------- IVF ---
 
 N_CENTROIDS = 16
@@ -340,37 +287,39 @@ _NEAR_DUP_SCHEMA = T.StructType(
 )
 
 
-def embedding_near_dup_arrow(
+def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.5,
     block_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Arrow-path :func:`embedding_near_dup`: same contract (each
-    vector's most-similar in-block neighbor + threshold flag), scored
-    by ONE numpy gram matmul per block inside ``applyInPandas``.
+    """Embedding-cosine near-dup candidates: each vector's most-similar
+    neighbor *within its block*, flagged ``is_near_dup`` at ``threshold``.
 
-    Why it exists: the Catalyst version's ``zip_with``/``aggregate``
-    dot product is an interpreted higher-order expression — correct,
-    but ~μs per element-pair; at |block| b and dim d a block costs
-    b²·d interpreted lambda evals.  A b×d float64 matmul does the same
-    work at BLAS speed (measured ~4× end-to-end on the sf0.1 corpus,
-    and the gap widens with b and d).  This is the documented Python
-    escape hatch (SURVEY.md §2.11): vectorized Arrow batches, never
-    per-row Python — the same trade :func:`ivf_assign` makes.
+    The blocking key turns the O(n²) all-pairs cosine into per-block
+    work: pairs are only scored inside a block (the corpus ``label``,
+    or the k-means cluster in semantic dedup; at 100 TB a coarse
+    quantizer / LSH bucket plays the same role — see ``lsh_bucket``).
+    Each block is scored by ONE numpy gram matmul inside
+    ``applyInPandas`` — the documented Python escape hatch (SURVEY.md
+    §2.11): vectorized Arrow batches, never per-row Python, the same
+    trade :func:`ivf_assign` makes.  A ``zip_with``/``aggregate`` dot
+    product is an interpreted higher-order expression, ~μs per
+    element-pair, so a block of b vectors at dim d would cost b²·d
+    lambda evals.
 
     Determinism: cosines are computed in float64 and rounded to 6 dp
     (BLAS pairwise summation differs from a sequential fold by ~1e-15
     — far inside the rounding guard); rows are sorted by id before the
     argmax so ties at equal rounded similarity resolve to the SMALLEST
-    neighbor id, exactly matching the Catalyst version's
-    (cos DESC, neighbor_id) window order.
+    neighbor id — the (cos DESC, neighbor_id) order the DuckDB oracles
+    rank by.
 
     At scale each block must fit one worker's memory (b·d doubles plus
     a transient b² tile — bound b via the blocking key's granularity:
     more k-means clusters, finer LSH buckets).  Singleton blocks emit
-    nothing, same as the join form.
+    nothing.
     """
     emb = embeddings.select(
         F.col(id_col).cast("long").alias("vec_id"),

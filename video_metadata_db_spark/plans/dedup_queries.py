@@ -390,15 +390,13 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the FULL-corpus transitive closure — the invariant
     that incremental maintenance, batch by batch, lands on exactly the
     labels a from-scratch recompute would produce."""
-    import tempfile
-
     from ..streaming.incremental_dedup import (
         dedup_state_maintainer,
         read_dedup_labels,
     )
-    from ..streaming.runner import file_stream, run_foreach_batch
+    from ..streaming.runner import file_stream, run_foreach_batch, scratch_dir
 
-    work = tempfile.mkdtemp(prefix="vmdb_incdedup_")
+    work = scratch_dir("vmdb_incdedup_")
     docs = load_table(spark, sf_dir, "documents")
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "overwrite"

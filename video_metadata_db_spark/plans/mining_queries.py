@@ -294,30 +294,14 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vector → cluster, squared-distance) assignment — the grouping
     stage of semantic dedup and cluster-balanced data mixing.
 
-    The corpus-sized assignment pass is pure codegen (zip_with +
-    aggregate folds against broadcast centroid literals); the update
-    is a k×dim-cell aggregate — see operators/clustering.py for the
-    full determinism contract that lets an UNROLLED DuckDB Lloyd's
-    verify every value."""
+    The corpus-sized assignment pass is one BLAS distance expansion
+    per Arrow batch (``mapInPandas``); the update is a k×dim-cell
+    aggregate — see operators/clustering.py for the full determinism
+    contract that lets an UNROLLED DuckDB Lloyd's verify every value."""
     from ..operators.clustering import kmeans_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
     return kmeans_assign(emb, k=_K, n_iter=_N_ITER).orderBy("vec_id")
-
-
-@query("kmeans_clusters_arrow", oracle=_kmeans_oracle())
-def q_kmeans_clusters_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow-assignment k-means (``kmeans_assign_arrow``): one BLAS
-    distance expansion per Arrow batch instead of k·dim interpreted
-    fold evaluations per row — the LARGE-k scale path (measured ×5.6
-    wall on the fold at k 8→80 in the round-5 scale experiment).  Same
-    determinism contract as the fold, so the SAME unrolled DuckDB
-    Lloyd's oracle value-checks it — the cross-engine proof that the
-    two physical strategies compute one operator."""
-    from ..operators.clustering import kmeans_assign_arrow
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assign_arrow(emb, k=_K, n_iter=_N_ITER).orderBy("vec_id")
 
 
 def _cluster_profile_oracle() -> str:
@@ -402,29 +386,21 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     given label) is the blocking key, so candidate generation stays an
     equi-join with O(Σ cluster²) pairs instead of O(n²).
 
-    Composes two verified operators (kmeans_assign_arrow →
-    embedding_near_dup_arrow with cluster as the block), and the
-    oracle composes the same way: the unrolled Lloyd's CTE feeding a
-    within-cluster cosine top-1.  BOTH passes take the ARROW path —
-    assignment as a BLAS distance expansion (identical to the
-    codegen fold under the shared determinism contract, pinned by
-    test_kmeans_arrow_matches_fold; the fold's per-row cost ∝ k·dim
-    makes it the wrong physical strategy as k scales with n) and
-    scoring as one numpy gram matmul per cluster (bit-identical to the
-    zip_with fold, pinned by test_arrow_and_fold_near_dup_agree, 8.7×
-    faster at sf0.1); the label-blocked `dedup_embedding_cosine` and
-    `kmeans_clusters` keep the JVM-fold surfaces pinned.  At 100 TB:
-    k scales ~√n so clusters stay worker-sized (candidate growth
-    measured ×10.03 at ×10 corpus — SCALE_MEASURE.json)."""
-    from ..operators.clustering import kmeans_assign_arrow
-    from ..operators.similarity import embedding_near_dup_arrow
+    Composes two verified operators (kmeans_assign →
+    embedding_near_dup with cluster as the block), and the oracle
+    composes the same way: the unrolled Lloyd's CTE feeding a
+    within-cluster cosine top-1.  Both passes are Arrow-batched numpy:
+    assignment as a BLAS distance expansion, scoring as one gram
+    matmul per cluster.  At 100 TB: k scales ~√n so clusters stay
+    worker-sized (candidate growth measured ×10.03 at ×10 corpus —
+    SCALE_MEASURE.json)."""
+    from ..operators.clustering import kmeans_assign
+    from ..operators.similarity import embedding_near_dup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = kmeans_assign_arrow(emb, k=_K, n_iter=_N_ITER).select("vec_id", "cluster")
+    assigned = kmeans_assign(emb, k=_K, n_iter=_N_ITER).select("vec_id", "cluster")
     blocked = emb.join(assigned, "vec_id")
-    return embedding_near_dup_arrow(blocked, threshold=0.5, block_col="cluster").orderBy(
-        "vec_id"
-    )
+    return embedding_near_dup(blocked, threshold=0.5, block_col="cluster").orderBy("vec_id")
 
 
 @query(
@@ -1535,13 +1511,11 @@ def q_stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the sketch's mergeability property verified end to end (batch
     build ≡ streamed cell-sum), the same invariant discipline as
     `stream_incremental_dedup` vs the full-corpus closure."""
-    import tempfile
-
     from ..operators.sketches import cms_probe
-    from ..streaming.runner import file_stream, run_foreach_batch
+    from ..streaming.runner import file_stream, run_foreach_batch, scratch_dir
     from ..streaming.sketches import cms_state_maintainer, read_cms_cells
 
-    work = tempfile.mkdtemp(prefix="vmdb_cms_")
+    work = scratch_dir("vmdb_cms_")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "overwrite"

@@ -10,8 +10,6 @@ rewrite (lag → new-session flag → running sum → group).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark.sql import functions as F
@@ -24,6 +22,7 @@ from ..streaming.runner import (
     file_stream,
     run_available_now,
     run_available_now_to_parquet,
+    scratch_dir,
 )
 from ..streaming.stateful import running_user_totals
 from ..streaming.windows import session_stats, sliding_avg, stream_dedup, tumbling_counts
@@ -191,7 +190,7 @@ def q_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     state updated in the state store, memory sink returned.  The oracle
     is the equivalent batch aggregate — state starting empty makes the
     single-batch totals equal lifetime totals."""
-    work = tempfile.mkdtemp(prefix="vmdb_stateful_")
+    work = scratch_dir("vmdb_stateful_")
     events = load_table(spark, sf_dir, "events")
     events.coalesce(1).write.mode("overwrite").parquet(f"{work}/src")
     stream = file_stream(spark, f"{work}/src", events.schema)
@@ -220,7 +219,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table.  State at scale is one key per event_id, bounded by
     the watermark in the `dropDuplicatesWithinWatermark` variant
     (tests/test_streaming.py pins state survival across restart)."""
-    work = tempfile.mkdtemp(prefix="vmdb_sdedup_")
+    work = scratch_dir("vmdb_sdedup_")
     events = load_table(spark, sf_dir, "events")
     events.coalesce(1).write.mode("overwrite").parquet(f"{work}/src")
     events.filter(F.col("event_id") % 3 == 0).coalesce(1).write.mode(
@@ -249,7 +248,7 @@ def q_stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     other streaming queries use is test plumbing; this is the shape a
     real pipeline ships — same checkpoint dir across restarts continues
     where the previous run stopped (`runner.run_available_now_to_parquet`)."""
-    work = tempfile.mkdtemp(prefix="vmdb_psink_")
+    work = scratch_dir("vmdb_psink_")
     events = load_table(spark, sf_dir, "events")
     events.coalesce(1).write.mode("overwrite").parquet(f"{work}/src")
     stream = file_stream(spark, f"{work}/src", events.schema)
@@ -279,7 +278,7 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch), so the watermark evicts state only after every pair
     has been emitted — output equals the batch interval join the oracle
     computes."""
-    work = tempfile.mkdtemp(prefix="vmdb_ssjoin_")
+    work = scratch_dir("vmdb_ssjoin_")
     events = load_table(spark, sf_dir, "events")
     for side, etype in (("views", "view"), ("clicks", "click")):
         events.filter(F.col("event_type") == etype).select(
@@ -318,7 +317,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild of a small dim hash map), so the stream never shuffles; a
     dim too big to broadcast would instead be a shuffled join per batch
     and usually argues for pre-denormalizing the stream at ingest."""
-    work = tempfile.mkdtemp(prefix="vmdb_senrich_")
+    work = scratch_dir("vmdb_senrich_")
     events = load_table(spark, sf_dir, "events")
     events.filter(F.col("event_type").isin("view", "click", "purchase")).coalesce(
         1
@@ -391,7 +390,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the stream."""
     from ..operators.mor import VersionedParquetTable, cdc_apply
 
-    work = tempfile.mkdtemp(prefix="vmdb_scdc_")
+    work = scratch_dir("vmdb_scdc_")
     table = VersionedParquetTable(spark, f"{work}/table")
     cust = load_table(spark, sf_dir, "customer")
     base = cust.select(
@@ -504,7 +503,7 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     idle-ish stores cost ~2 s/run at bench SF (measured 3.5 → 1.65 s
     for run 1, 1.0 → 0.63 s for run 2; identical output).  On a real
     cluster the partition count follows data volume instead."""
-    work = tempfile.mkdtemp(prefix="vmdb_slate_")
+    work = scratch_dir("vmdb_slate_")
     events = load_table(spark, sf_dir, "events")
     bounds = events.agg(
         (F.max("ts") - F.expr("INTERVAL 2 HOURS")).alias("lo")
@@ -638,7 +637,7 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     scd2.count()  # materialize the dim once, outside the stream
 
-    work = tempfile.mkdtemp(prefix="vmdb_sscd2_")
+    work = scratch_dir("vmdb_sscd2_")
     facts = events.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
@@ -729,7 +728,7 @@ def q_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical, the buffered state is benchmark-sized.  The DuckDB
     oracle is the batch LEFT JOIN with the same slice and time
     predicate — value-checking both the matched AND the null rows."""
-    work = tempfile.mkdtemp(prefix="vmdb_ssoj_")
+    work = scratch_dir("vmdb_ssoj_")
     events = load_table(spark, sf_dir, "events")
     cols = ["user_id", "ts", "event_id"]
     # staging is TWO write jobs total, not four: one partitionBy job
@@ -822,7 +821,7 @@ def q_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour→day double aggregate."""
     from ..streaming.windows import chained_daily_peak
 
-    work = tempfile.mkdtemp(prefix="vmdb_chw_")
+    work = scratch_dir("vmdb_chw_")
     events = load_table(spark, sf_dir, "events")
     cols = ["ts", "event_type"]
     events.select(*cols).repartition(1).write.mode("overwrite").parquet(
@@ -907,7 +906,7 @@ def q_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched updates, bounded by concurrency not history."""
     from ..streaming.stateful import gap_sessions
 
-    work = tempfile.mkdtemp(prefix="vmdb_sess_")
+    work = scratch_dir("vmdb_sess_")
     events = load_table(spark, sf_dir, "events")
     cols = ["user_id", "ts"]
     reals = events.filter(F.col("user_id") % 10 == 7).select(*cols)
@@ -986,7 +985,7 @@ def q_stream_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     is user_id, and the drain runs at 8 shuffle partitions for the
     same idle-state-store reason as `stream_late_data_drop` (a
     cluster sizes partitions to data instead)."""
-    work = tempfile.mkdtemp(prefix="vmdb_dyng_")
+    work = scratch_dir("vmdb_dyng_")
     events = load_table(spark, sf_dir, "events")
     reals = events.filter(F.col("user_id") % 10 == 3).select(
         "event_id",
@@ -1079,7 +1078,7 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     two queries' state footprints equivalent.  The DuckDB oracle is
     the batch FULL JOIN with side filters INSIDE the join inputs
     (a WHERE would discard the null-extended rows it filters on)."""
-    work = tempfile.mkdtemp(prefix="vmdb_sfoj_")
+    work = scratch_dir("vmdb_sfoj_")
     events = load_table(spark, sf_dir, "events")
     cols = ["user_id", "ts", "event_id"]
     reals = events.filter(

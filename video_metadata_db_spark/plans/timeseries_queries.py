@@ -3012,12 +3012,10 @@ def q_stream_reach_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stream_cms_heavy_hitters` discipline applied to MIN state).
     Per-ingest cost is O(batch) + one |users|-row state merge; the
     curve rollup runs on the calendar-bounded day grid."""
-    import tempfile
-
     from ..streaming.firstseen import first_seen_maintainer, read_first_seen
-    from ..streaming.runner import file_stream, run_foreach_batch
+    from ..streaming.runner import file_stream, run_foreach_batch, scratch_dir
 
-    work = tempfile.mkdtemp(prefix="vmdb_reach_")
+    work = scratch_dir("vmdb_reach_")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )

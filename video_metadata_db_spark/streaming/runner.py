@@ -11,12 +11,24 @@ the broken mmap membership scan (:427-452).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory for a query's staged source files,
+    checkpoint and sink.  It is removed at interpreter exit, not
+    before: the frames a query returns read the sink lazily."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def file_stream(
